@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ai_etl_framework_spark.sqlnames import ident
+
 
 def approx_distinct(
     df: DataFrame,
@@ -271,7 +273,7 @@ def kmv_sketch(
             yield pd.DataFrame(out, columns=gc + ["__u"])
 
     schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}"
+        [f"{ident(f.name)} {f.dataType.simpleString()}"
          for f in hashed.schema.fields]
     )
     pruned = hashed.mapInPandas(_local_prune, schema=schema)

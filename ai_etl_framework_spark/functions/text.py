@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ai_etl_framework_spark.sqlnames import ident
+
 # small, fixed stopword lists (top function words); order of LANGS is
 # the deterministic tie-break (first wins on equal scores)
 STOPWORDS: dict[str, list[str]] = {
@@ -226,7 +228,7 @@ def _quality_score_sql(name: str) -> str:
     (every float literal carries ``D``: a bare 0.3 parses as
     DECIMAL). Pinned bit-identical in
     tests/test_text_quality_sql.py."""
-    t = "`" + name.replace("`", "``") + "`"
+    t = ident(name)
     en = ", ".join(_sql_str(w) for w in STOPWORDS["en"])
     alnum = _sql_str(_ALNUM_WS)
     punct_excess = (

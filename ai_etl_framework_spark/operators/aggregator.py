@@ -94,18 +94,18 @@ array_sort/assembly distribute over the whole cluster — and
 aggregates in two levels, per (slice, group) then per group, where
 level 2 only merges one pre-assembled part per (group, slice) in
 slice order (the ``operators.skew.ordered_group_concat`` shape,
-generalized to all 10 functions; rn is GLOBALLY order-monotone there
-because the range partition id occupies its high bits). Cost: two
+generalized to first/last/concat/list; rn is GLOBALLY order-monotone
+there because the range partition id occupies its high bits). Cost: two
 extra exchanges (range spread + level-1) versus the default's one —
 the trade that buys a distributed sort; keep the default for
 many-group workloads where per-group volumes are already small.
-Under the distributed path only concat/list actually ride the
-range-sorted frame (r10): first/last take their shuffle-free min_by
-path and the scalar functions one plain hash aggregation, null-safe
-joined back on the group keys (group-count-sized frames — AQE
-broadcasts) — the range shuffle then carries only order columns +
-collect fields, and the sorted frame's per-row buffer updates drop
-from |spec| to |collecting| (q07 at sf1: 3.6 → 2.9 s noop).
+Under the distributed path only the order-sensitive functions ride
+the range-sorted frame (r10, r12): the scalar functions run as one
+plain hash aggregation, null-safe joined back on the group keys
+(group-count-sized frames — AQE broadcasts) — the range shuffle then
+carries only order columns + ordered fields, and the sorted frame's
+per-row buffer updates drop from |spec| to |ordered| (q07 at sf1:
+3.6 → 2.9 s noop).
 Custom functions cannot split into two levels and raise under
 ``distribute_sort``. A group's concat/list OUTPUT must fit one
 buffer either way — that part is inherent to the semantics; the
@@ -127,23 +127,38 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ai_etl_framework_spark.sqlnames import ident, ref
+
 AGG_FUNCTIONS = {
     "sum", "avg", "min", "max", "count",
     "count_distinct", "first", "last", "concat", "list",
 }
 
 
-def _sql_name(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+def _temp_names(
+    prefix: str, names: Sequence[str], *frames: DataFrame
+) -> list[str]:
+    """``prefix + name`` for each name, lengthened with leading
+    underscores until no column of ``frames`` (and no earlier temp
+    name) carries it — so a user output named like a temp column can
+    never collide with one."""
+    taken = {c for f in frames for c in f.columns}
+    out: list[str] = []
+    for n in names:
+        t = prefix + n
+        while t in taken:
+            t = "_" + t
+        taken.add(t)
+        out.append(t)
+    return out
 
 
-def _sql_safe(name: str) -> bool:
-    """True when ``name`` denotes the same column as a backtick-quoted
-    SQL identifier. Dotted names resolve as struct-field paths through
-    ``F.col`` but as exact top-level names once quoted (the r13 dedup
-    fast-path trap — ADVICE r13), and backticked names have quoting
-    subtleties of their own — both fall back to the Column-API build."""
-    return "." not in name and "`" not in name
+def _order_operand(operand: Optional[str], fn: str) -> str:
+    if operand is None:
+        # Aggregator._aggregate always supplies one; reaching this is
+        # a bug in the caller, not a user error
+        raise ValueError(f"{fn!r} needs an order operand")
+    return operand
 
 
 def _agg_expr_sql(
@@ -153,25 +168,26 @@ def _agg_expr_sql(
     no_expand: bool = False,
     order_key_sql: Optional[str] = None,
     shared_concat_fields: frozenset[str] = frozenset(),
-) -> Optional[str]:
-    """SQL text for one builtin aggregate — the same expression tree
-    :meth:`Aggregator._expr_column_api` builds, parsed JVM-side in ONE
-    py4j round trip instead of assembled element-wise through the
-    gateway (r13/r14 plan-build campaign, guide §5: the Column-API
-    build of a 9-function spec costs ~911 round trips ≈ 0.3 s of pure
-    driver latency per q07 construction). Returns ``None`` when the
-    tree has no safe text form (unquotable field name, missing order
-    operand) — callers then use the Column-API reference build.
-    Equality is pinned by
+) -> str:
+    """SQL text for one builtin aggregate over the user column
+    reference ``field`` (:func:`ref`), parsed JVM-side in ONE py4j
+    round trip (r13/r14 plan-build campaign: assembling the same tree
+    element-wise through the Column API cost ~911 round trips ≈ 0.3 s
+    of pure driver latency per q07 construction).
+
+    The order-sensitive functions reduce over an order operand:
+    ``rn_sql`` (the input-order stamp — required by concat/list) or,
+    for first/last without a stamp, ``order_key_sql`` (the nulls-last
+    struct key of :func:`_order_key_sql`). A missing operand raises
+    ``ValueError``. The Column-API reference build lives in
+    tests/column_reference.py; equality is pinned by
     tests/test_aggregator_properties.py::test_expr_sql_text_matches_column_api.
 
     Literal rules (the r13 traps): every float literal carries ``D``
     (a bare ``0.0`` parses as DECIMAL); lambda variables use ``__``
     names so a same-named input column cannot shadow differently than
     the API path's compiler-fresh variables."""
-    if not _sql_safe(field):
-        return None
-    c = _sql_name(field)
+    c = ref(field)
     num = f"try_cast({c} AS DOUBLE)"
     order_operand = rn_sql if rn_sql is not None else order_key_sql
     if fn == "sum":
@@ -186,6 +202,11 @@ def _agg_expr_sql(
         return "CAST(count(1) AS BIGINT)"
     if fn == "count_distinct":
         if no_expand and field in shared_concat_fields and rn_sql is not None:
+            # a concat on the SAME field already collects these exact
+            # entries — Catalyst dedups the identical collect_list, so
+            # the distinct count reads that one buffer (pinned in
+            # test_plan_quality); the entry skips NULLs as
+            # count_distinct must (ref :23)
             entry = (
                 f"CASE WHEN {c} IS NOT NULL THEN "
                 f"struct({rn_sql} AS r, CAST({c} AS STRING) AS v) END"
@@ -198,80 +219,61 @@ def _agg_expr_sql(
             return f"CAST(size(collect_set(CAST({c} AS STRING))) AS BIGINT)"
         return f"CAST(count(DISTINCT CAST({c} AS STRING)) AS BIGINT)"
     if fn in ("first", "last"):
-        if order_operand is None:
-            return None
+        # the operand is never NULL as a whole, so min_by/max_by see
+        # every row — first/last include NULL values (ref :24-25)
         red = "min_by" if fn == "first" else "max_by"
-        return f"CAST({red}({c}, {order_operand}) AS STRING)"
+        return f"CAST({red}({c}, {_order_operand(order_operand, fn)}) AS STRING)"
     if fn == "concat":
-        if rn_sql is None:
-            return None
+        # NULL value → NULL entry → collect_list skips it (ref :26);
+        # rn is unique, so array_sort resolves on the leading long
         entry = (
             f"CASE WHEN {c} IS NOT NULL THEN "
-            f"struct({rn_sql} AS r, CAST({c} AS STRING) AS v) END"
+            f"struct({_order_operand(rn_sql, fn)} AS r, "
+            f"CAST({c} AS STRING) AS v) END"
         )
         return (
             f"array_join(transform(array_sort(collect_list({entry})), "
             f"__s -> __s.v), ', ')"
         )
     if fn == "list":
-        if rn_sql is None:
-            return None
         entry = (
             f"CASE WHEN {c} IS NOT NULL THEN "
-            f"struct({rn_sql} AS r, {c} AS v) END"
+            f"struct({_order_operand(rn_sql, fn)} AS r, {c} AS v) END"
         )
         return f"transform(array_sort(collect_list({entry})), __s -> __s.v)"
-    return None
+    raise ValueError(f"unknown aggregation function: {fn!r}")
 
 
 def _dist_exprs_sql(
     out: str, field: str, fn: str, rn_sql: str = "__rn",
-) -> Optional[tuple[list[str], str]]:
-    """SQL text for one function's two-level (``_distributed``)
-    aggregation: ``(level-1 partial expressions, level-2 final
-    expression)`` — the same trees the Column-API branches in
-    :meth:`Aggregator._distributed` build (kept verbatim there as the
-    pinned reference and the fallback), parsed JVM-side in one round
-    trip each (r14: the x06/distributed build cost 980 py4j round
-    trips ≈ 0.34 s — the shape q07's "auto" takes at sf1+, i.e. the
-    cost every at-scale build pays). ``None`` when a name has no safe
-    quoted form. Equality pinned by
-    tests/test_aggregator_properties.py::test_distributed_sql_text_matches_column_api."""
-    if not (_sql_safe(field) and _sql_safe(out)):
-        return None
-    c = _sql_name(field)
-    num = f"try_cast({c} AS DOUBLE)"
-    p = _sql_name(f"__p_{out}")
-    o = _sql_name(out)
+) -> tuple[list[str], str]:
+    """SQL text for one order-sensitive function's two-level
+    (:meth:`Aggregator._distributed`) aggregation: ``(level-1 partial
+    expressions, level-2 final expression)``, each parsed JVM-side in
+    one round trip (r14: building them through the Column API cost the
+    x06/distributed build 980 py4j round trips ≈ 0.34 s — the shape
+    q07's "auto" takes at sf1+). The scalar functions never get here:
+    :meth:`Aggregator._distributed` runs them as one plain aggregation.
+    ``field`` is a user column reference (:func:`ref`); ``out`` and
+    its ``__p_<out>`` partial are top-level names (:func:`ident`).
+    Pinned against a DuckDB twin in
+    tests/test_aggregator_properties.py::test_distributed_sql_text_matches_column_api
+    and against the reference model in
+    test_aggregator_matches_reference_model."""
+    c = ref(field)
+    p = ident(f"__p_{out}")
+    o = ident(out)
 
     def slice_part(pe: str) -> str:
         # one entry per (group, slice), keyed by slice id so level 2
-        # reassembles in global order (mirror of the Column slice_part)
+        # reassembles in global order; __slice is unique within a
+        # level-2 group, so array_sort never compares the payloads
         return f"array_sort(collect_list(struct(__slice AS p, {pe} AS v)))"
 
-    if fn == "sum":
-        return ([f"sum({num}) AS {p}"],
-                f"CAST(coalesce(sum({p}), 0.0D) AS DOUBLE) AS {o}")
-    if fn == "avg":
-        ps = _sql_name(f"__p_{out}_s")
-        pn = _sql_name(f"__p_{out}_n")
-        return ([f"sum({num}) AS {ps}", f"count({num}) AS {pn}"],
-                f"CAST((sum({ps}) / sum({pn})) AS DOUBLE) AS {o}")
-    if fn == "min":
-        return ([f"min({num}) AS {p}"],
-                f"CAST(min({p}) AS DOUBLE) AS {o}")
-    if fn == "max":
-        return ([f"max({num}) AS {p}"],
-                f"CAST(max({p}) AS DOUBLE) AS {o}")
-    if fn == "count":
-        # coalesce: a GLOBAL aggregation over zero rows must yield 0
-        return ([f"count(1) AS {p}"],
-                f"CAST(coalesce(sum({p}), 0) AS BIGINT) AS {o}")
-    if fn == "count_distinct":
-        return ([f"collect_set(CAST({c} AS STRING)) AS {p}"],
-                f"CAST(size(array_distinct(flatten(collect_list({p})))) "
-                f"AS BIGINT) AS {o}")
     if fn in ("first", "last"):
+        # rn is globally order-monotone and unique, so the struct
+        # min/max commutes across slices and never compares v (which
+        # may be NULL — first/last include NULL values, ref :24-25)
         red = "min" if fn == "first" else "max"
         return ([f"{red}(struct({rn_sql} AS r, {c} AS v)) AS {p}"],
                 f"CAST(({red}({p})).v AS STRING) AS {o}")
@@ -287,57 +289,30 @@ def _dist_exprs_sql(
                 f"array_join(filter(transform({slice_part(p)}, "
                 f"__s -> __s.v), __x -> __x IS NOT NULL), ', ') AS {o}")
     if fn == "list":
+        # empty slice arrays flatten away; parts are never NULL
+        # (collect_list of no entries is [])
         entry = (f"CASE WHEN {c} IS NOT NULL THEN "
                  f"struct({rn_sql} AS r, {c} AS v) END")
         return ([f"transform(array_sort(collect_list({entry})), "
                  f"__s -> __s.v) AS {p}"],
                 f"flatten(transform({slice_part(p)}, __s -> __s.v)) AS {o}")
-    return None
+    raise ValueError(f"no two-level form for {fn!r}")
 
 
-def _order_key_sql(order_names: Sequence[str]) -> Optional[str]:
-    """SQL text of :func:`_order_key` over NAMED order columns — the
-    asc-NULLS-LAST struct the shuffle-free first/last path reduces
-    over. ``None`` when any name has no safe quoted form."""
-    if not all(_sql_safe(n) for n in order_names):
-        return None
+def _order_key_sql(order_names: Sequence[str]) -> str:
+    """Struct implementing asc NULLS LAST over the order column
+    references: per component a boolean is-null flag (false < true)
+    precedes the value, so a NULL component sorts after every non-null
+    one and the value fields are only compared between two non-nulls
+    (or two NULLs, which the struct comparator treats as equal). Used
+    by the shuffle-free first/last path — commutative argmin/argmax
+    over this key needs no repartition, no sort, and no stamp."""
     fields: list[str] = []
     for i, n in enumerate(order_names):
-        c = _sql_name(n)
+        c = ref(n)
         fields.append(f"({c} IS NULL) AS __n{i}")
         fields.append(f"{c} AS __k{i}")
     return "struct(" + ", ".join(fields) + ")"
-
-
-def _ncol(name: str) -> Column:
-    """Column reference by NAME, built in one JVM parse when the name
-    has a safe quoted form (measured r14: ``F.col`` costs ~13 py4j
-    round trips per call in this pyspark, ``F.expr`` 3 — the q07 build
-    spent more trips constructing its six order-column references than
-    its nine aggregate expressions). Falls back to ``F.col`` for
-    dotted/backticked names, preserving their resolution semantics."""
-    return F.expr(_sql_name(name)) if _sql_safe(name) else F.col(name)
-
-
-def _num(c: Column) -> Column:
-    """Numeric view of a column: non-numeric values → NULL (so they are
-    ignored, matching the reference's isinstance(v, (int, float)) guard)."""
-    return c.try_cast("double")
-
-
-def _order_key(order_cols: Sequence[Column]) -> Column:
-    """Struct implementing asc NULLS LAST over the raw order columns:
-    per component a boolean is-null flag (false < true) precedes the
-    value, so a NULL component sorts after every non-null one and the
-    value fields are only compared between two non-nulls (or two
-    NULLs, which the struct comparator treats as equal). Used by the
-    shuffle-free first/last path — commutative argmin/argmax over this
-    key needs no repartition, no sort, and no stamp."""
-    fields: list[Column] = []
-    for i, o in enumerate(order_cols):
-        fields.append(o.isNull().alias(f"__n{i}"))
-        fields.append(o.alias(f"__k{i}"))
-    return F.struct(*fields)
 
 
 def _normalize_float_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -487,51 +462,19 @@ class Aggregator:
         out: str,
         field: str,
         fn: str,
-        rn: Optional[Column] = None,
-        no_expand: bool = False,
-        order_key: Optional[Column] = None,
-        shared_concat_fields: frozenset[str] = frozenset(),
         rn_sql: Optional[str] = None,
-        order_key_sql: Optional[str] = None,
-    ) -> Column:
-        """One aggregate expression per output field — parsed from SQL
-        text in one JVM round trip when the tree has a safe text form
-        (r14 plan-build campaign, guide §5), else built through the
-        Column API (:meth:`_expr_column_api`, the pinned reference:
-        custom functions, unquotable field names, Column-only order
-        operands). ``rn_sql``/``order_key_sql`` are the text forms of
-        ``rn``/``order_key`` — callers pass both representations so
-        either path can serve any spec row."""
-        if fn in AGG_FUNCTIONS:
-            text = _agg_expr_sql(
-                field, fn, rn_sql=rn_sql, no_expand=no_expand,
-                order_key_sql=order_key_sql,
-                shared_concat_fields=shared_concat_fields,
-            )
-            if text is not None:
-                return F.expr(f"{text} AS {_sql_name(out)}")
-        return self._expr_column_api(
-            out, field, fn, rn, no_expand, order_key, shared_concat_fields
-        )
-
-    def _expr_column_api(
-        self,
-        out: str,
-        field: str,
-        fn: str,
-        rn: Optional[Column] = None,
         no_expand: bool = False,
-        order_key: Optional[Column] = None,
+        order_key_sql: Optional[str] = None,
         shared_concat_fields: frozenset[str] = frozenset(),
     ) -> Column:
-        """One aggregate expression per output field (Column-API build
-        — the executable reference :func:`_agg_expr_sql` is pinned
-        against, and the fallback for specs with no safe text form).
+        """One aggregate expression per output field: a builtin is its
+        :func:`_agg_expr_sql` text aliased to ``out``; a registered
+        custom function is its pandas UDAF over the field reference.
 
-        ``rn`` is the per-group-monotone input-order stamp (see the
-        module docstring) — required by the four order-sensitive
-        functions; each consumes it with an order-INDEPENDENT
-        primitive.
+        ``rn_sql`` is the per-group-monotone input-order stamp (see the
+        module docstring) — required by concat/list; first/last reduce
+        over it when present, else over ``order_key_sql``. Each
+        consumes its operand with an order-INDEPENDENT primitive.
 
         ``no_expand``: when the plan already carries a per-group
         collect buffer (concat/list present), a DISTINCT aggregate
@@ -544,83 +487,48 @@ class Aggregator:
         (constant-size buffers) the Expand path's countDistinct stays
         — it scales to high cardinality where a set would not (judge
         advice r5)."""
-        c = F.col(field)
-        if fn == "sum":
-            e = F.coalesce(F.sum(_num(c)), F.lit(0.0))  # empty → 0 (ref :18)
-        elif fn == "avg":
-            e = F.avg(_num(c))
-        elif fn == "min":
-            e = F.min(_num(c))
-        elif fn == "max":
-            e = F.max(_num(c))
-        elif fn == "count":
-            e = F.count(F.lit(1)).cast("long")  # includes NULLs (ref :22)
-        elif fn == "count_distinct":
-            if no_expand and field in shared_concat_fields and rn is not None:
-                # a concat on the SAME field is already collecting
-                # struct(rn, cast(c as string)) entries — build the
-                # distinct count from THAT buffer instead of a second
-                # per-row aggregation state (Catalyst dedups identical
-                # aggregate expressions, so only one collect_list
-                # buffer exists in the plan; pinned in
-                # test_plan_quality). The entry skips NULLs exactly as
-                # count_distinct must (ref :23). Measured −0.07s on
-                # q07 sf0.1 vs the separate collect_set.
-                entry = F.when(
-                    c.isNotNull(),
-                    F.struct(rn.alias("r"), c.cast("string").alias("v")),
-                )
-                e = F.size(
-                    F.array_distinct(
-                        F.transform(F.collect_list(entry), lambda s: s["v"])
-                    )
-                ).cast("long")
-            elif no_expand:
-                e = F.size(F.collect_set(c.cast("string"))).cast("long")
-            else:
-                e = F.countDistinct(c.cast("string")).cast("long")  # string-cast (ref :23)
-        elif fn == "first":
-            # the ordering operand (rn long or nulls-last struct key —
-            # whichever path __call__ chose) is never NULL as a whole,
-            # so min_by/max_by see every row — first/last include NULL
-            # values (ref :24-25)
-            e = F.min_by(c, rn if rn is not None else order_key).cast("string")
-        elif fn == "last":
-            e = F.max_by(c, rn if rn is not None else order_key).cast("string")
-        elif fn == "concat":
-            # NULL value → NULL entry → collect_list skips it: exactly
-            # concat's drop-NULLs semantics (ref :26). array_sort runs
-            # on the fully merged buffer, so collect order never
-            # matters; rn is unique, so the struct comparator resolves
-            # on the leading long and never touches the value field.
-            entry = F.when(
-                c.isNotNull(),
-                F.struct(rn.alias("r"), c.cast("string").alias("v")),
+        if fn in AGG_FUNCTIONS:
+            text = _agg_expr_sql(
+                field, fn, rn_sql=rn_sql, no_expand=no_expand,
+                order_key_sql=order_key_sql,
+                shared_concat_fields=shared_concat_fields,
             )
-            e = F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(entry)), lambda s: s["v"]
-                ),
-                ", ",
-            )
-        elif fn == "list":
-            # non-null values in input order, original type preserved (ref :27)
-            entry = F.when(c.isNotNull(), F.struct(rn.alias("r"), c.alias("v")))
-            e = F.transform(
-                F.array_sort(F.collect_list(entry)), lambda s: s["v"]
-            )
-        elif fn in self.custom:
-            e = self.custom[fn](c)
-        else:
-            # validated here, not in __init__, so add_custom_function can
-            # register after construction (ref add_custom_function :302-321)
-            raise ValueError(f"unknown aggregation function: {fn!r}")
-        if fn in ("sum", "avg", "min", "max"):
-            e = e.cast("double")  # output typing rule (ref :275-292)
-        return e.alias(out)
+            return F.expr(f"{text} AS {ident(out)}")
+        if fn in self.custom:
+            return self.custom[fn](F.expr(ref(field))).alias(out)
+        # validated here, not in __init__, so add_custom_function can
+        # register after construction (ref add_custom_function :302-321)
+        raise ValueError(f"unknown aggregation function: {fn!r}")
 
     ORDER_SENSITIVE = ("first", "last", "concat", "list")
     COLLECTING = ("concat", "list")
+
+    def _null_safe_join(
+        self, left: DataFrame, right: DataFrame, prefix: str, how: str
+    ) -> DataFrame:
+        """Join two group-keyed aggregation results on the group
+        columns. NULL and NaN group keys match themselves (exactly as
+        groupBy grouped them); -0.0/0.0 were already normalized to one
+        group by both groupBys. Group-count-sized frames — AQE
+        broadcasts the join.
+
+        Both frames lead with the group columns (groupBy's output
+        order). Right's are renamed to ``prefix``-ed temp names no
+        column of either frame carries, so the join is one parsed
+        projection and one parsed ``<=>`` conjunction (the
+        EqualNullSafe expression); the caller's final projection drops
+        the temp columns."""
+        n = len(self.group_by)
+        keys = left.columns[:n]
+        tmp = _temp_names(prefix, keys, left, right)
+        right = right.selectExpr(
+            *[f"{ident(k)} AS {ident(t)}" for k, t in zip(keys, tmp)],
+            *[ident(c) for c in right.columns[n:]],
+        )
+        cond = " AND ".join(
+            f"{ident(k)} <=> {ident(t)}" for k, t in zip(keys, tmp)
+        )
+        return left.join(right, F.expr(cond), how)
 
     def _join_on_groups(
         self,
@@ -628,49 +536,18 @@ class Aggregator:
         right: DataFrame,
         specs: Sequence[tuple[str, dict[str, str]]],
     ) -> DataFrame:
-        """Null-safe join of two group-keyed aggregation results,
-        restoring the spec's output-column order. NULL and NaN group
-        keys match themselves (exactly as groupBy grouped them);
-        -0.0/0.0 were already normalized to one group by both
-        groupBys. Group-count-sized frames — AQE broadcasts the
-        join.
-
-        r14 plan-build: when every involved name has a safe quoted
-        form (and the rename targets don't collide with left's
-        columns), the per-key withColumnRenamed loop and the
-        eqNullSafe Column chain collapse to one selectExpr + one
-        parsed ``<=>`` conjunction (the same EqualNullSafe
-        expression) — ~66 → ~25 py4j round trips per mixed/split
-        build. The Column path below is the reference and the
-        fallback."""
-        if self.group_by:
-            tmp = {g: f"__ga_{g}" for g in self.group_by}
-            fast = (
-                all(_sql_safe(c) for c in right.columns)
-                and all(_sql_safe(c) for c in left.columns)
-                and set(tmp.values()).isdisjoint(left.columns)
-            )
-            if fast:
-                right = right.selectExpr(*[
-                    f"{_sql_name(c)} AS {_sql_name(tmp[c])}"
-                    if c in tmp else _sql_name(c)
-                    for c in right.columns
-                ])
-                cond = F.expr(" AND ".join(
-                    f"{_sql_name(g)} <=> {_sql_name(t)}"
-                    for g, t in tmp.items()
-                ))
-            else:
-                for g, t in tmp.items():
-                    right = right.withColumnRenamed(g, t)
-                cond = None
-                for g, t in tmp.items():
-                    c = left[g].eqNullSafe(right[t])
-                    cond = c if cond is None else cond & c
-            result = left.join(right, cond).drop(*tmp.values())
+        """Inner :meth:`_null_safe_join` of two aggregation results
+        over the same groups (a cross join of the two one-row frames
+        of a global aggregation), restoring the spec's output-column
+        order."""
+        keys = left.columns[:len(self.group_by)]
+        if keys:
+            result = self._null_safe_join(left, right, "__ga_", "inner")
         else:
             result = left.crossJoin(right)
-        return result.select(*self.group_by, *[out for out, _ in specs])
+        return result.selectExpr(
+            *[ident(k) for k in keys], *[ident(out) for out, _ in specs]
+        )
 
     def _distributed(
         self,
@@ -698,8 +575,9 @@ class Aggregator:
         partition sort) is GLOBALLY monotone in the order key — the
         range partition id occupies its high bits — so first/last
         reduce over struct(rn, value) with constant buffers across
-        both levels. Same output as the default path for all 10
-        functions (differential-tested in
+        both levels. Both levels are the SQL text of
+        :func:`_dist_exprs_sql`. Same output as the default path for
+        all 10 functions (differential-tested in
         tests/test_aggregator_properties.py); see the module
         docstring's Scale notes for the cost trade. Generalizes
         ``operators.skew.ordered_group_concat`` (whose NULL-part/
@@ -712,19 +590,19 @@ class Aggregator:
                     f"functions (cannot split {spec['function']!r} into "
                     "two levels); use the default path"
                 )
-        # r10 (q07 sf1 re-profile): only concat/list genuinely need the
-        # range-sorted stamped frame; the order-insensitive scalars are
-        # plain hash aggregations — routing them through _aggregate
-        # (which cannot re-enter here: a spec with no collecting fn
-        # takes the min_by or plain branch) and null-safe-joining the
-        # group-sized frames keeps their buffer updates OFF the sorted
-        # frame and their bytes OUT of the range shuffle. Measured at
-        # sf1 (6M rows, q07's 9-fn spec): 3.6s -> ~2.9s noop; at
-        # 100 TB the range shuffle carries only order cols + collect
-        # fields.
+        # r10 (q07 sf1 re-profile): only the order-sensitive functions
+        # need the range-sorted stamped frame; the order-insensitive
+        # scalars are plain hash aggregations — routing them through
+        # _aggregate (which cannot re-enter here: a spec with no
+        # collecting fn takes the min_by or plain branch) and
+        # null-safe-joining the group-sized frames keeps their buffer
+        # updates OFF the sorted frame and their bytes OUT of the range
+        # shuffle. Measured at sf1 (6M rows, q07's 9-fn spec): 3.6s ->
+        # ~2.9s noop; at 100 TB the range shuffle carries only order
+        # cols + ordered fields.
         #
         # r12 (VERDICT r11 item 1 — the q07 profile): first/last RIDE
-        # the collecting branch when one exists instead of going to
+        # this path next to concat/list instead of going to
         # _aggregate's min_by path. The min_by struct key is the FULL
         # order tuple (q07: 6 columns incl. strings) compared per row
         # per function; on the stamped frame the same reduction is
@@ -733,24 +611,19 @@ class Aggregator:
         # the ride-along is ~free. Component-profiled at sf0.1:
         # first/last-only via min_by 0.99 s vs numerics-only 0.22 s —
         # the struct-key reduction WAS the dominant scalar cost.
-        # Without a collecting fn the min_by path stays: it is
-        # shuffle-free, which the stamp path can never be.
-        collecting = [
-            (o, s) for o, s in specs if s["function"] in self.COLLECTING
+        # (_aggregate only calls here when concat/list is present;
+        # first/last alone keep the shuffle-free min_by path.)
+        ordered = [
+            (o, s) for o, s in specs if s["function"] in self.ORDER_SENSITIVE
         ]
-        if collecting:
-            ordered = [
-                (o, s) for o, s in specs
-                if s["function"] in self.ORDER_SENSITIVE
-            ]
-            scalar = [
-                (o, s) for o, s in specs
-                if s["function"] not in self.ORDER_SENSITIVE
-            ]
-            if scalar:
-                left = self._distributed(df, order_cols, ordered)
-                right = self._aggregate(df, scalar)
-                return self._join_on_groups(left, right, specs)
+        scalar = [
+            (o, s) for o, s in specs
+            if s["function"] not in self.ORDER_SENSITIVE
+        ]
+        if scalar:
+            left = self._distributed(df, order_cols, ordered)
+            right = self._aggregate(df, scalar)
+            return self._join_on_groups(left, right, specs)
         ordering = [o.asc_nulls_last() for o in order_cols]
         df = (
             df.repartitionByRange(*ordering)
@@ -758,119 +631,12 @@ class Aggregator:
             .withColumn("__rn", F.monotonically_increasing_id())
             .withColumn("__slice", F.spark_partition_id())
         )
-        rn = F.col("__rn")
         partials: list[Column] = []
         finals: list[Column] = []
         for out, spec in specs:
-            fn = spec["function"]
-            # SQL-text build first (r14 plan-build campaign, guide §5):
-            # one JVM parse per expression instead of the Column-API
-            # py4j chains below, which stay as the pinned reference
-            # (tests pin text-vs-Column equality) and the fallback for
-            # unquotable names
-            texts = _dist_exprs_sql(out, spec["field"], fn)
-            if texts is not None:
-                partials.extend(F.expr(t) for t in texts[0])
-                finals.append(F.expr(texts[1]))
-                continue
-            c = F.col(spec["field"])
-            p = f"__p_{out}"
-
-            def slice_part(pe: Column) -> Column:
-                # one entry per (group, slice), keyed by slice id so
-                # level 2 reassembles in global order; __slice is
-                # unique within a level-2 group, so array_sort never
-                # compares the part payloads
-                return F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("__slice").alias("p"), pe.alias("v"))
-                    )
-                )
-
-            if fn == "sum":
-                partials.append(F.sum(_num(c)).alias(p))
-                finals.append(
-                    F.coalesce(F.sum(p), F.lit(0.0)).cast("double").alias(out)
-                )
-            elif fn == "avg":
-                partials.append(F.sum(_num(c)).alias(f"{p}_s"))
-                partials.append(F.count(_num(c)).alias(f"{p}_n"))
-                finals.append(
-                    (F.sum(f"{p}_s") / F.sum(f"{p}_n")).cast("double").alias(out)
-                )
-            elif fn == "min":
-                partials.append(F.min(_num(c)).alias(p))
-                finals.append(F.min(p).cast("double").alias(out))
-            elif fn == "max":
-                partials.append(F.max(_num(c)).alias(p))
-                finals.append(F.max(p).cast("double").alias(out))
-            elif fn == "count":
-                partials.append(F.count(F.lit(1)).alias(p))
-                # coalesce: a GLOBAL aggregation over zero rows must
-                # yield 0 like F.count does, not sum-of-nothing NULL
-                finals.append(
-                    F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(out)
-                )
-            elif fn == "count_distinct":
-                # per-slice sets union at level 2; bounded by the
-                # collect buffers the distributed path implies, exactly
-                # like the default collecting path's collect_set
-                partials.append(F.collect_set(c.cast("string")).alias(p))
-                finals.append(
-                    F.size(F.array_distinct(F.flatten(F.collect_list(p))))
-                    .cast("long")
-                    .alias(out)
-                )
-            elif fn in ("first", "last"):
-                # rn is globally order-monotone, so the struct min/max
-                # commutes across slices; rn is unique, so the
-                # comparator resolves on the leading long and never
-                # touches v (which may be NULL — first/last include
-                # NULL values, ref :24-25)
-                red = F.min if fn == "first" else F.max
-                partials.append(
-                    red(F.struct(rn.alias("r"), c.alias("v"))).alias(p)
-                )
-                finals.append(red(F.col(p))["v"].cast("string").alias(out))
-            elif fn == "concat":
-                entry = F.when(
-                    c.isNotNull(),
-                    F.struct(rn.alias("r"), c.cast("string").alias("v")),
-                )
-                se = F.array_sort(F.collect_list(entry))
-                # a slice with NO entries for a group (all values NULL
-                # there) must yield a NULL part, not '' — '' is a
-                # legitimate part (a slice whose only value is the
-                # empty string) that must survive into the assembly
-                partials.append(
-                    F.when(
-                        F.size(se) > 0,
-                        F.array_join(F.transform(se, lambda s: s["v"]), ", "),
-                    ).alias(p)
-                )
-                finals.append(
-                    F.array_join(
-                        F.filter(
-                            F.transform(slice_part(F.col(p)), lambda s: s["v"]),
-                            lambda x: x.isNotNull(),
-                        ),
-                        ", ",
-                    ).alias(out)
-                )
-            elif fn == "list":
-                entry = F.when(c.isNotNull(), F.struct(rn.alias("r"), c.alias("v")))
-                partials.append(
-                    F.transform(
-                        F.array_sort(F.collect_list(entry)), lambda s: s["v"]
-                    ).alias(p)
-                )
-                # empty slice arrays flatten away; parts are never NULL
-                # (collect_list of no entries is [])
-                finals.append(
-                    F.flatten(
-                        F.transform(slice_part(F.col(p)), lambda s: s["v"])
-                    ).alias(out)
-                )
+            part, final = _dist_exprs_sql(out, spec["field"], spec["function"])
+            partials.extend(F.expr(t) for t in part)
+            finals.append(F.expr(final))
         lvl1 = df.groupBy("__slice", *self.group_by).agg(*partials)
         return lvl1.groupBy(*self.group_by).agg(*finals)
 
@@ -883,79 +649,40 @@ class Aggregator:
         distribute_sort, stamping), and each count_distinct output
         becomes distinct (group, string-cast value) -> count-per-group,
         LEFT-joined back with a 0 default so an all-NULL group still
-        reports 0 exactly as countDistinct does. The joined frames are
-        group-count-sized — AQE broadcasts them."""
+        reports 0 exactly as countDistinct does (see
+        :meth:`_null_safe_join`). The pre-dedup frame, the count and
+        the 0 default are each one parsed SQL text."""
         cd = [(o, s) for o, s in specs if s["function"] == "count_distinct"]
         rest = [(o, s) for o, s in specs if s["function"] != "count_distinct"]
         left = self._aggregate(df, rest)
+        keys = left.columns[:len(self.group_by)]
+        (v,) = _temp_names("__cd_", ["v"], left)  # differs from keys
         for out, spec in cd:
-            field = spec["field"]
-            # r14 plan-build: one-parse forms of the pre-dedup frame,
-            # the count, and the null-safe join condition when every
-            # name is quotable (same trees; the Column path below is
-            # the reference/fallback — see _join_on_groups)
-            fast = (
-                _sql_safe(field) and _sql_safe(out)
-                and all(_sql_safe(g) for g in self.group_by)
-                and all(_sql_safe(c) for c in left.columns)
-                and not any(
-                    f"__cd_{g}" in left.columns for g in self.group_by
+            dd = (
+                df.selectExpr(
+                    *[ref(g) for g in self.group_by],
+                    f"CAST({ref(spec['field'])} AS STRING) AS {ident(v)}",
                 )
+                .where(f"{ident(v)} IS NOT NULL")
+                .distinct()
             )
-            if fast:
-                dd = (
-                    df.selectExpr(
-                        *[_sql_name(g) for g in self.group_by],
-                        f"CAST({_sql_name(field)} AS STRING) AS __cd_v",
-                    )
-                    .where("__cd_v IS NOT NULL")
-                    .distinct()
-                )
-                cnt = dd.groupBy(*self.group_by).agg(
-                    F.expr(f"CAST(count(1) AS BIGINT) AS {_sql_name(out)}")
-                )
-            else:
-                c = F.col(field).cast("string")
-                dd = (
-                    df.where(c.isNotNull())
-                    .select(*self.group_by, c.alias("__cd_v"))
-                    .distinct()
-                )
-                cnt = dd.groupBy(*self.group_by).agg(
-                    F.count(F.lit(1)).cast("long").alias(out)
-                )
-            if self.group_by and fast:
-                tmp = {g: f"__cd_{g}" for g in self.group_by}
-                cnt = cnt.selectExpr(*[
-                    f"{_sql_name(g)} AS {_sql_name(t)}"
-                    for g, t in tmp.items()
-                ] + [_sql_name(out)])
-                cond = F.expr(" AND ".join(
-                    f"{_sql_name(g)} <=> {_sql_name(t)}"
-                    for g, t in tmp.items()
-                ))
-                left = left.join(cnt, cond, "left").drop(*tmp.values())
-            elif self.group_by:
-                tmp = {g: f"__cd_{g}" for g in self.group_by}
-                for g, t in tmp.items():
-                    cnt = cnt.withColumnRenamed(g, t)
-                cond = None
-                for g, t in tmp.items():
-                    e = left[g].eqNullSafe(cnt[t])
-                    cond = e if cond is None else cond & e
-                left = left.join(cnt, cond, "left").drop(*tmp.values())
+            cnt = dd.groupBy(*self.group_by).agg(
+                F.expr(f"CAST(count(1) AS BIGINT) AS {ident(out)}")
+            )
+            if keys:
+                joined = self._null_safe_join(left, cnt, "__cd_", "left")
             else:
                 # global aggregation: the rest frame is exactly one
                 # row; a left join keeps it even when every value was
                 # NULL (empty cnt frame)
-                left = left.join(cnt, F.lit(True), "left")
-            left = left.withColumn(
-                out,
-                F.expr(f"coalesce({_sql_name(out)}, CAST(0 AS BIGINT))")
-                if fast
-                else F.coalesce(F.col(out), F.lit(0).cast("long")),
+                joined = left.join(cnt, F.lit(True), "left")
+            left = joined.selectExpr(
+                *[ident(c) for c in left.columns],
+                f"coalesce({ident(out)}, CAST(0 AS BIGINT)) AS {ident(out)}",
             )
-        return left.select(*self.group_by, *[o for o, _ in specs])
+        return left.selectExpr(
+            *[ident(k) for k in keys], *[ident(o) for o, _ in specs]
+        )
 
     def __call__(self, df: DataFrame) -> DataFrame:
         specs = list(self.aggregations.items())
@@ -1014,15 +741,7 @@ class Aggregator:
         ):
             return self._split_count_distinct(df, specs)
         if not self.order_col:  # None or empty sequence
-            order_cols = [F.monotonically_increasing_id()]
             order_names: list[str] = ["__row_order"]
-        elif isinstance(self.order_col, str):
-            order_cols = [_ncol(self.order_col)]
-            order_names = [self.order_col]
-        else:
-            order_cols = [_ncol(c) for c in self.order_col]
-            order_names = list(self.order_col)
-        if not self.order_col:
             needs_order = sorted(
                 {s["function"] for s in self.aggregations.values()}
                 & set(self.ORDER_SENSITIVE)
@@ -1042,13 +761,14 @@ class Aggregator:
                     "input-order semantics.",
                     stacklevel=2,
                 )
-            df = df.withColumn("__row_order", order_cols[0])
-            order_cols = [F.col("__row_order")]
+            df = df.withColumn("__row_order", F.monotonically_increasing_id())
+        elif isinstance(self.order_col, str):
+            order_names = [self.order_col]
+        else:
+            order_names = list(self.order_col)
         fns = {spec["function"] for _, spec in specs}
         has_ordered = bool(fns & set(self.ORDER_SENSITIVE))
         needs_stamp = bool(fns & set(self.COLLECTING))
-        rn = None
-        order_key = None
         rn_sql = None
         order_key_sql = None
         if has_ordered and not needs_stamp:
@@ -1060,15 +780,15 @@ class Aggregator:
             # buffers. At 100 TB this is the difference between
             # shuffling every input row (the stamp path below) and
             # shuffling one buffer per group per task.
-            order_key = _order_key(order_cols)
             order_key_sql = _order_key_sql(order_names)
-        elif has_ordered and self._should_distribute(df):
-            # FEW/giant groups (or a global aggregation): the default
-            # path below would sort everything in |groups| tasks.
-            # Range-spread the ORDER key instead and aggregate in two
-            # levels — see _distributed.
-            return self._distributed(df, order_cols, specs)
         elif has_ordered:
+            order_cols = [F.expr(ref(n)) for n in order_names]
+            if self._should_distribute(df):
+                # FEW/giant groups (or a global aggregation): the
+                # default path below would sort everything in |groups|
+                # tasks. Range-spread the ORDER key instead and
+                # aggregate in two levels — see _distributed.
+                return self._distributed(df, order_cols, specs)
             # ONE Tungsten sort + a trivial monotonically_increasing_id
             # projection stamps the per-group input-order long every
             # order-sensitive aggregate derives from (module docstring:
@@ -1096,12 +816,11 @@ class Aggregator:
                 # advice r6). Normalize the VALUES first: the groupBy
                 # output key is the normalized form either way.
                 df = _normalize_float_keys(df, self.group_by)
-                df = df.repartition(*[_ncol(g) for g in self.group_by])
+                df = df.repartition(*[F.expr(ref(g)) for g in self.group_by])
                 df = df.sortWithinPartitions(*ordering)
             else:
                 df = df.repartition(1).sortWithinPartitions(*ordering)
             df = df.withColumn("__rn", F.monotonically_increasing_id())
-            rn = F.col("__rn")
             rn_sql = "__rn"
         # count_distinct trades Expand-avoidance for a collect_set ONLY
         # when a collect buffer already exists (judge advice r5: gating
@@ -1111,10 +830,9 @@ class Aggregator:
             spec["field"] for _, spec in specs if spec["function"] == "concat"
         )
         exprs = [
-            self._expr(out, spec["field"], spec["function"], rn,
-                       no_expand=needs_stamp, order_key=order_key,
-                       shared_concat_fields=shared_concat_fields,
-                       rn_sql=rn_sql, order_key_sql=order_key_sql)
+            self._expr(out, spec["field"], spec["function"], rn_sql=rn_sql,
+                       no_expand=needs_stamp, order_key_sql=order_key_sql,
+                       shared_concat_fields=shared_concat_fields)
             for out, spec in specs
         ]
         return df.groupBy(*self.group_by).agg(*exprs)

@@ -29,12 +29,15 @@ Design notes
 
 from __future__ import annotations
 
+import math
 import threading
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ai_etl_framework_spark.sqlnames import ident
 
 
 # ---------------------------------------------------------------------------
@@ -257,7 +260,7 @@ def shingles(text: Column | str, k: int = 3) -> Column:
     which a backtick-quoted text identifier would not)."""
     if isinstance(text, str) and "." not in text:
         return F.expr(_SHINGLE_EXPR_TMPL.format(
-            t="`" + text.replace("`", "``") + "`", k=int(k)
+            t=ident(text), k=int(k)
         ))
     if isinstance(text, str):
         text = F.col(text)
@@ -327,9 +330,8 @@ def minhash_signatures(
     # — pure driver-side cost on every call, identical analyzed plan
     # (the SQL text is exactly _minhash_ab's tree; equality pinned in
     # tests/test_dedup_fuzzy.py::test_minhash_exprs_match_column_api).
-    idq = "`" + id_col.replace("`", "``") + "`"
     sh = sh.selectExpr(
-        idq,
+        ident(id_col),
         "CAST(conv(substring(md5(__s), 1, 15), 16, 10) AS BIGINT) AS __a",
         "CAST(conv(substring(md5(__s), 17, 8), 16, 10) AS BIGINT) AS __b",
     )
@@ -517,8 +519,13 @@ def _dlit(x: float) -> str:
     ``D`` suffix is unconditional (ADVICE r13 — a bare ``0.5`` parses
     as DECIMAL, and an exponent form like ``1e-09`` is only DOUBLE
     while ``spark.sql.legacy.exponentLiteralAsDecimal.enabled`` stays
-    false; ``1e-09D`` is valid under either conf)."""
-    return repr(float(x)) + "D"
+    false; ``1e-09D`` is valid under either conf). Non-finite input
+    raises ``ValueError``: ``repr`` would give ``infD``/``nanD``, which
+    Spark cannot parse."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"expected a finite number, got {x!r}")
+    return repr(x) + "D"
 
 
 def _prefix_frame(sh_sets: DataFrame, threshold: float) -> DataFrame:

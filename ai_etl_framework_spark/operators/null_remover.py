@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ai_etl_framework_spark.sqlnames import ident
+
 STRATEGIES = {"drop", "drop_all", "fill", "remove_fields"}
 
 
@@ -42,7 +44,7 @@ def _is_nullish(df: DataFrame, name: str) -> Column:
 
 def _nullish_sql(df: DataFrame, name: str) -> str:
     """SQL text of :func:`_is_nullish` (same tree, one JVM parse)."""
-    c = "`" + name.replace("`", "``") + "`"
+    c = ident(name)
     if isinstance(df.schema[name].dataType, T.StringType):
         return f"({c} IS NULL OR {c} = '')"
     return f"({c} IS NULL)"

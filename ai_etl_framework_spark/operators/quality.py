@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ai_etl_framework_spark.sqlnames import ident
+
 ID_EXACT = {"id", "user_id", "customer_id"}
 
 
@@ -49,10 +51,6 @@ def _is_numeric(dt: T.DataType) -> bool:
 
 def _is_integer(dt: T.DataType) -> bool:
     return isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-
-
-def _sql_name(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def quality_expressions(df: DataFrame) -> dict[str, Column]:
@@ -77,7 +75,7 @@ def quality_expressions(df: DataFrame) -> dict[str, Column]:
     val_den: list[str] = []
     cons: list[str] = []
     for f in fields:
-        c = _sql_name(f.name)
+        c = ident(f.name)
         is_str = isinstance(f.dataType, T.StringType)
         nullish = f"({c} IS NULL OR {c} = '')" if is_str else f"({c} IS NULL)"
         low = f.name.lower()

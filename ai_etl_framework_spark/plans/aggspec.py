@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ai_etl_framework_spark.plans.filters import Filter, apply_filters
+from ai_etl_framework_spark.sqlnames import ident, ref
 
 AGG_FUNCS = {"sum", "avg", "min", "max", "count", "count_distinct"}
 
@@ -61,52 +62,27 @@ class AggregationSpec:
 
 
 def _metric_expr(m: Metric, approx: bool) -> Column:
-    """One metric Column — parsed from SQL text in one JVM round trip
-    when the names have a safe quoted form (r14 plan-build campaign:
-    the Column-API build costs ~15-30 py4j round trips per metric, all
-    pure driver latency), else the Column-API reference build below.
-    Equality pinned in tests/test_plans.py::test_metric_expr_sql_text_
-    matches_column_api."""
-    from ai_etl_framework_spark.operators.aggregator import _sql_name, _sql_safe
-
-    if _sql_safe(m.column) and _sql_safe(m.out_name) and (
-        m.column != "*" or m.agg == "count"  # '*' only means COUNT(*)
-    ):
-        c = _sql_name(m.column)
-        if m.agg == "count":
-            body = "count(1)" if m.column == "*" else f"count({c})"
-        elif m.agg == "count_distinct":
+    """One metric as SQL text, parsed JVM-side in one round trip (r14
+    plan-build campaign: the Column-API build costs ~15-30 py4j round
+    trips per metric, all pure driver latency). ``m.column`` is a user
+    column reference (:func:`ref`, ``F.col``'s rules; ``*`` only means
+    COUNT(*)), the alias a top-level name (:func:`ident`). The
+    Column-API reference build lives in tests/column_reference.py;
+    equality pinned in
+    tests/test_plans.py::test_metric_expr_sql_text_matches_column_api."""
+    if m.agg == "count" and m.column == "*":
+        body = "count(1)"  # ref builds COUNT(*) when column is '*'
+    else:
+        c = ref(m.column)
+        if m.agg == "count_distinct":
             body = (
                 f"approx_count_distinct({c})" if approx
                 else f"count(DISTINCT {c})"
             )
         else:
+            # COUNT(column): SQL semantics — non-null rows
             body = f"{m.agg}({c})"
-        return F.expr(f"{body} AS {_sql_name(m.out_name)}")
-    return _metric_expr_column_api(m, approx)
-
-
-def _metric_expr_column_api(m: Metric, approx: bool) -> Column:
-    """Column-API reference build of the same metric (pinned against
-    the SQL-text path above; the fallback for unquotable names)."""
-    c = F.col(m.column)
-    if m.agg == "sum":
-        e = F.sum(c)
-    elif m.agg == "avg":
-        e = F.avg(c)
-    elif m.agg == "min":
-        e = F.min(c)
-    elif m.agg == "max":
-        e = F.max(c)
-    elif m.agg == "count":
-        # COUNT(column): SQL semantics — non-null rows. ``*`` means
-        # COUNT(*) (ref builds COUNT(*) when column is '*').
-        e = F.count(F.lit(1)) if m.column == "*" else F.count(c)
-    elif m.agg == "count_distinct":
-        e = F.approx_count_distinct(c) if approx else F.countDistinct(c)
-    else:  # pragma: no cover
-        raise AssertionError(m.agg)
-    return e.alias(m.out_name)
+    return F.expr(f"{body} AS {ident(m.out_name)}")
 
 
 def compile_query(
@@ -145,8 +121,12 @@ def compile_query(
     if order_col is None and spec.metrics:
         # default: first metric DESC (ref duckdb_service.py:384-393)
         order_col = spec.metrics[0].out_name
-    if order_col is not None and (spec.group_by or order_col in [m.out_name for m in spec.metrics]):
-        out = out.orderBy(F.col(order_col).desc() if spec.order_desc else F.col(order_col).asc())
+    out_names = [m.out_name for m in spec.metrics]
+    if order_col is not None and (spec.group_by or order_col in out_names):
+        # a metric alias is a top-level output name (``st.x_sum`` is
+        # not a struct path); anything else is a column reference
+        key = F.expr(ident(order_col) if order_col in out_names else ref(order_col))
+        out = out.orderBy(key.desc() if spec.order_desc else key.asc())
 
     if spec.limit:
         out = out.limit(spec.limit)

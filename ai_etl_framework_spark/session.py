@@ -19,6 +19,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ai_etl_framework_spark.sqlnames import ident
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -188,7 +190,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
 
     for c in NANO_TS_COLUMNS.get(name, []):
         if c in df.columns and dict(df.dtypes)[c] == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{ident(c)} div 1000")))
     ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
@@ -249,9 +251,8 @@ def ensure_timestamp(df, *cols):
         from pyspark.sql import functions as F
 
         def _as_utc(name: str):
-            # exact-name reference: backticks inside a quoted part are
-            # escaped by doubling (the one place a raw name is quoted)
-            c = F.col("`" + name.replace("`", "``") + "`")
+            # exact top-level name: ``cols`` are schema fields
+            c = F.col(ident(name))
             return F.make_timestamp(
                 F.year(c), F.month(c), F.dayofmonth(c),
                 F.hour(c), F.minute(c),

@@ -22,6 +22,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from ai_etl_framework_spark.sqlnames import ident
+
 # ref sqlite_loader.py:114-127
 _TYPEMAP: list[tuple[type, str]] = [
     (T.BooleanType, "INTEGER"),
@@ -130,4 +132,4 @@ def read_sqlite(spark, db_path: str, table: str) -> DataFrame:
         rows = cur.fetchall()
     finally:
         con.close()
-    return spark.createDataFrame(rows, cols) if rows else spark.createDataFrame([], schema=", ".join(f"`{c}` string" for c in cols))
+    return spark.createDataFrame(rows, cols) if rows else spark.createDataFrame([], schema=", ".join(f"{ident(c)} string" for c in cols))

@@ -63,7 +63,6 @@ def _model(rows):
     return out
 
 
-@pytest.mark.slow  # r14 driver-tier split: 126 s of hypothesis examples
 @pytest.mark.parametrize("distribute", [False, True])
 @settings(max_examples=12, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -450,7 +449,8 @@ def test_auto_saturated_estimate_reads_leaf_stats(spark, tmp_path):
 def test_expr_sql_text_matches_column_api(spark):
     """r14 plan-build campaign pin: every builtin aggregate branch's
     SQL text (_agg_expr_sql — ONE JVM parse) must produce bit-identical
-    results to the Column-API reference build (_expr_column_api) on
+    results to the Column-API reference build
+    (tests/column_reference.py::_expr_column_api) on
     every physical operand form the paths use: the __rn stamp (concat/
     list present), the nulls-last struct order key (first/last only),
     the shared-concat count_distinct buffer, the collect_set no_expand
@@ -459,10 +459,11 @@ def test_expr_sql_text_matches_column_api(spark):
     non-numeric strings in numeric positions."""
     from ai_etl_framework_spark.operators.aggregator import (
         _agg_expr_sql,
-        _order_key,
         _order_key_sql,
     )
     from pyspark.sql import functions as F
+
+    from tests.column_reference import _expr_column_api, _order_key
 
     rows = [
         # (ord, g, v, s)
@@ -498,8 +499,8 @@ def test_expr_sql_text_matches_column_api(spark):
         assert text is not None, (fn, field)
         got_exprs.append(F.expr(text).alias(f"g_{i}"))
         ref_exprs.append(
-            agg._expr_column_api(f"r_{i}", field, fn, rn, no_expand=True,
-                                 shared_concat_fields=shared)
+            _expr_column_api(agg, f"r_{i}", field, fn, rn, no_expand=True,
+                             shared_concat_fields=shared)
         )
     def _same(g, r):
         if isinstance(g, float) and isinstance(r, float) \
@@ -522,10 +523,10 @@ def test_expr_sql_text_matches_column_api(spark):
     out2 = df.groupBy("g").agg(
         F.expr(f"CAST(min_by(s, {key_sql}) AS STRING)").alias("g_first"),
         F.expr(f"CAST(max_by(s, {key_sql}) AS STRING)").alias("g_last"),
-        agg._expr_column_api("r_first", "s", "first", order_key=key_col),
-        agg._expr_column_api("r_last", "s", "last", order_key=key_col),
+        _expr_column_api(agg, "r_first", "s", "first", order_key=key_col),
+        _expr_column_api(agg, "r_last", "s", "last", order_key=key_col),
         F.expr(_agg_expr_sql("s", "count_distinct")).alias("g_cd"),
-        agg._expr_column_api("r_cd", "s", "count_distinct"),
+        _expr_column_api(agg, "r_cd", "s", "count_distinct"),
     ).collect()
     for row in out2:
         assert row["g_first"] == row["r_first"], row
@@ -533,43 +534,112 @@ def test_expr_sql_text_matches_column_api(spark):
         assert row["g_cd"] == row["r_cd"], row
 
 
-def test_expr_sql_unsafe_names_fall_back_to_column_api(spark):
-    """A field/order name with a dot or backtick has no safe quoted
-    text form (the r13 dedup fast-path trap): _agg_expr_sql must
-    refuse (None) and the Aggregator must still answer through the
-    Column-API build, unchanged from pre-r14 behavior."""
+@pytest.mark.parametrize("distribute", [False, True])
+def test_every_name_has_a_sql_text_form(spark, distribute):
+    """Every column name has a SQL text form, so every spec row takes
+    the one build path: a struct-path field (``st.x``, F.col's rules),
+    a top-level dotted column referenced as ``"`v.x`"``, a column whose
+    name holds a backtick (``"`a``b`"`` references ``a`b``), and output
+    names holding a dot or a backtick — on the default stamp path and
+    on the distributed path (whose split joins the scalars back)."""
     from ai_etl_framework_spark.operators.aggregator import (
         _agg_expr_sql,
+        _dist_exprs_sql,
         _order_key_sql,
     )
 
-    assert _agg_expr_sql("a.b", "sum") is None
-    assert _agg_expr_sql("a`b", "count") is None
-    assert _order_key_sql(["ok", "bad.name"]) is None
-    # order-sensitive functions with no order operand have no text form
-    assert _agg_expr_sql("s", "first") is None
-    assert _agg_expr_sql("s", "concat", rn_sql=None) is None
+    assert "`st`.`x`" in _agg_expr_sql("st.x", "sum")
+    assert _order_key_sql(["`v.x`"]) == (
+        "struct((`v.x` IS NULL) AS __n0, `v.x` AS __k0)"
+    )
+    partials, final = _dist_exprs_sql("o`ut", "`a``b`", "first")
+    assert partials == ["min(struct(__rn AS r, `a``b` AS v)) AS `__p_o``ut`"]
+    assert final.endswith("AS `o``ut`")
+    # an order-sensitive function without its order operand is a bug
+    # in the caller, never a silent alternative build
+    for fn in ("first", "concat", "list"):
+        with pytest.raises(ValueError, match="order operand"):
+            _agg_expr_sql("s", fn)
 
     df = spark.createDataFrame(
-        [(1, "a", 2.0), (2, "a", 3.0)], "ord long, g string, v double"
+        [
+            (1, "a", 2.0, (10.0,), "p"),
+            (2, "a", 3.0, (20.0,), None),
+            (3, "b", None, (None,), "q"),
+        ],
+        "ord long, g string, `v.x` double, st struct<x: double>, "
+        "`a``b` string",
     )
     agg = Aggregator(
         group_by=["g"],
-        aggregations={"total": {"field": "v", "function": "sum"},
-                      "cat": {"field": "v", "function": "concat"}},
+        aggregations={
+            "total": {"field": "`v.x`", "function": "sum"},
+            "cat": {"field": "`v.x`", "function": "concat"},
+            "st.sum": {"field": "st.x", "function": "sum"},
+            "first": {"field": "st.x", "function": "first"},
+            "o`ut": {"field": "`a``b`", "function": "list"},
+            "nd": {"field": "`a``b`", "function": "count_distinct"},
+        },
         order_col="ord",
+        distribute_sort=distribute,
     )
-    res = {r["g"]: (r["total"], r["cat"]) for r in agg(df).collect()}
-    assert res == {"a": (5.0, "2.0, 3.0")}
+    out = agg(df)
+    assert out.columns == ["g", "total", "cat", "st.sum", "first", "o`ut", "nd"]
+    res = {r[0]: tuple(r[1:]) for r in out.collect()}
+    assert res == {
+        "a": (5.0, "2.0, 3.0", 30.0, "10.0", ["p"], 1),
+        "b": (0.0, "", 0.0, None, ["q"], 1),
+    }
 
 
-def test_distributed_sql_text_matches_column_api(spark, monkeypatch):
-    """r14: the _distributed two-level build's SQL text must produce
-    bit-identical results to the Column-API reference branches for all
-    10 builtin functions, across multiple slices (the range spread) and
-    edge rows (NULL group keys, all-NULL groups, empty strings, NaN)."""
-    from ai_etl_framework_spark.operators import aggregator
+def _duckdb_twin(rows):
+    """The 10 functions over (ord, g, v, s) rows in DuckDB — an
+    independent engine computing the reference semantics, NaN-aware
+    (DuckDB, like Spark, orders NaN above every number)."""
+    import duckdb
 
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE TABLE t (ord BIGINT, g VARCHAR, v DOUBLE, s VARCHAR)"
+        )
+        con.executemany("INSERT INTO t VALUES (?, ?, ?, ?)", rows)
+        return con.execute("""
+            SELECT g,
+                   coalesce(sum(v), 0.0) AS total,
+                   avg(v) AS mean, min(v) AS lo, max(v) AS hi,
+                   count(*) AS n,
+                   count(DISTINCT s) AS cd,
+                   list(s ORDER BY ord)[1] AS f,
+                   list(s ORDER BY ord DESC)[1] AS l,
+                   coalesce(string_agg(s, ', ' ORDER BY ord), '') AS cat,
+                   list_filter(list(s ORDER BY ord), x -> x IS NOT NULL) AS lst
+            FROM t GROUP BY g
+        """).fetchall()
+    finally:
+        con.close()
+
+
+def _close(a, b):
+    """Equal, with NaN equal to itself and floats to 1e-12 relative."""
+    if isinstance(a, float) and isinstance(b, float):
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(a) and math.isnan(b)
+        return math.isclose(a, b, rel_tol=1e-12, abs_tol=1e-12)
+    if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        return len(a) == len(b) and all(_close(x, y) for x, y in zip(a, b))
+    return a == b
+
+
+def _by_group(rows):
+    return sorted((tuple(r) for r in rows), key=lambda t: (t[0] is None, t[0]))
+
+
+def test_distributed_sql_text_matches_column_api(spark):
+    """The _distributed two-level build (SQL text, its only build) must
+    answer all 10 builtin functions exactly as a DuckDB twin does,
+    across multiple slices (the range spread) and edge rows (NULL
+    group keys, all-NULL groups, empty strings, NaN)."""
     rows = [
         (0, "a", 1.25, "x"), (1, "a", None, None), (2, "a", -0.0, ""),
         (3, "b", float("nan"), "x, y"), (4, "b", 2.5, "x"),
@@ -589,53 +659,27 @@ def test_distributed_sql_text_matches_column_api(spark, monkeypatch):
         "cat": {"field": "s", "function": "concat"},
         "lst": {"field": "s", "function": "list"},
     }
-
-    def run():
-        agg = Aggregator(group_by=["g"], aggregations=aggs,
-                         order_col="ord", distribute_sort=True)
-        out = agg(df).collect()
-        return sorted(
-            (tuple(r) for r in out),
-            key=lambda t: (t[0] is None, t[0]),
-        )
-
-    got = run()  # SQL-text build (the shipping path)
-    monkeypatch.setattr(aggregator, "_dist_exprs_sql", lambda *a, **kw: None)
-    ref = run()  # Column-API reference build
-
-    def _same(a, b):
-        if isinstance(a, float) and isinstance(b, float) \
-                and math.isnan(a) and math.isnan(b):
-            return True
-        if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
-            return len(a) == len(b) and all(_same(x, y) for x, y in zip(a, b))
-        return a == b
-
-    assert _same(got, ref), (got, ref)
+    agg = Aggregator(group_by=["g"], aggregations=aggs,
+                     order_col="ord", distribute_sort=True)
+    got = _by_group(agg(df).collect())
+    want = _by_group(_duckdb_twin(rows))
+    assert _close(got, want), (got, want)
 
 
-def test_distributed_sql_unsafe_names_refuse_text_form():
-    from ai_etl_framework_spark.operators.aggregator import _dist_exprs_sql
-
-    assert _dist_exprs_sql("out", "a.b", "sum") is None
-    assert _dist_exprs_sql("o`ut", "v", "sum") is None
-    assert _dist_exprs_sql("out", "v", "sum") is not None
-
-
-def test_sql_fast_paths_match_column_fallbacks_everywhere(spark, monkeypatch):
-    """r14: force EVERY SQL-text fast path off (_sql_safe -> False) and
-    pin that the Column-API fallbacks produce identical results for the
-    specs that exercise all the converted plumbing at once — the
+def test_sql_fast_paths_match_column_fallbacks_everywhere(spark):
+    """The specs that exercise all the join plumbing at once — the
     count_distinct+scalars split (_split_count_distinct's pre-dedup +
-    null-safe join) and the mixed distributed spec (_join_on_groups),
-    over NULL group keys and all-NULL groups."""
-    from ai_etl_framework_spark.operators import aggregator
-
+    null-safe join) and the mixed distributed spec (_join_on_groups) —
+    must reproduce the reference model (_model) over NULL group keys
+    and all-NULL groups."""
     rows = [
         (0, "a", 1.0, "x"), (1, "a", None, None), (2, None, 2.0, "y"),
         (3, "b", 3.0, "y"), (4, "b", 4.0, ""), (5, "c", None, None),
     ]
     df = spark.createDataFrame(rows, "ord long, g string, v double, s string")
+    model = _model([(g, v, s) for _, g, v, s in rows])
+    # count_distinct over v: the model's string-cast distinct over v
+    model_v = _model([(g, v, v) for _, g, v, _ in rows])
     split_spec = {  # count_distinct next to scalars, no collect buffer
         "n": {"field": "v", "function": "count"},
         "total": {"field": "v", "function": "sum"},
@@ -652,10 +696,51 @@ def test_sql_fast_paths_match_column_fallbacks_everywhere(spark, monkeypatch):
     def run(spec, **kw):
         out = Aggregator(group_by=["g"], aggregations=spec,
                          order_col="ord", **kw)(df).collect()
-        return sorted((tuple(r) for r in out),
-                      key=lambda t: (t[0] is None, t[0]))
+        return {r["g"]: r.asDict() for r in out}
 
-    got = [run(split_spec), run(dist_spec, distribute_sort=True)]
-    monkeypatch.setattr(aggregator, "_sql_safe", lambda n: False)
-    ref = [run(split_spec), run(dist_spec, distribute_sort=True)]
-    assert got == ref, (got, ref)
+    got = run(split_spec)
+    assert set(got) == set(model)
+    for g, w in model.items():
+        assert got[g] == {"g": g, "n": w["n"], "total": w["total"],
+                          "cd": w["cd"], "cd2": model_v[g]["cd"]}, g
+    got = run(dist_spec, distribute_sort=True)
+    assert set(got) == set(model)
+    for g, w in model.items():
+        assert got[g] == {"g": g, "total": w["total"], "cd": w["cd"],
+                          "cat": w["cat"], "f": w["first_s"]}, g
+
+
+@pytest.mark.parametrize("spec, kw", [
+    # a dotted output through the distributed split's join-back
+    ({"a.b": ("v", "sum"), "c": ("s", "concat")}, {"distribute_sort": True}),
+    # a dotted output through the count_distinct split
+    ({"a.b": ("s", "count_distinct"), "n": ("v", "count")}, {}),
+    # outputs named like the joins' temp columns
+    ({"__ga_g": ("v", "my_sum"), "n": ("v", "count")}, {}),
+    ({"__cd_g": ("s", "count_distinct"), "n": ("v", "count")}, {}),
+], ids=["dotted-distributed", "dotted-count-distinct", "temp-ga", "temp-cd"])
+def test_split_specs_answer_whatever_the_output_names(spark, spec, kw):
+    """Every spec that splits into joined aggregations must answer
+    under any output name: a dot in the name (not a struct path), or
+    the name of a temp column the join would use."""
+    rows = [
+        (0, "a", 1.0, "x"), (1, "a", None, None), (2, None, 2.0, "y"),
+        (3, "b", 3.0, "y"), (4, "b", 4.0, ""), (5, "c", None, None),
+    ]
+    df = spark.createDataFrame(rows, "ord long, g string, v double, s string")
+    model = _model([(g, v, s) for _, g, v, s in rows])
+    key = {"sum": "total", "my_sum": "total", "count": "n",
+           "count_distinct": "cd", "concat": "cat"}
+    agg = Aggregator(
+        group_by=["g"],
+        aggregations={o: {"field": f, "function": fn}
+                      for o, (f, fn) in spec.items()},
+        order_col="ord", **kw,
+    )
+    agg.add_custom_function("my_sum", lambda s: float(s.sum()))
+    out = agg(df)
+    assert out.columns == ["g", *spec]
+    got = {r[0]: list(r[1:]) for r in out.collect()}
+    assert got == {
+        g: [w[key[fn]] for _, fn in spec.values()] for g, w in model.items()
+    }

@@ -1113,3 +1113,22 @@ def test_shingles_expr_matches_column_api(spark):
             "id", shingles(F.col("t x"), k).alias("sh")
         ).orderBy("id").collect()
         assert [list(r["sh"]) for r in got] == [list(r["sh"]) for r in ref], k
+
+
+@pytest.mark.parametrize("threshold", [float("nan"), float("inf"), float("-inf")])
+def test_prefix_filter_rejects_non_finite_threshold(spark, threshold):
+    """A non-finite threshold has no SQL DOUBLE literal (``repr`` gives
+    ``nanD``/``infD``, which Spark cannot parse): the call itself must
+    raise ValueError, before any prefix frame is built or persisted."""
+    from ai_etl_framework_spark.operators.dedup import (
+        _dlit,
+        prefix_filter_candidates,
+    )
+
+    with pytest.raises(ValueError, match="finite"):
+        _dlit(threshold)
+    sh_sets = spark.createDataFrame(
+        [(1, ["a b c"], 1)], "id long, sh array<string>, n_sh int"
+    )
+    with pytest.raises(ValueError, match="finite"):
+        prefix_filter_candidates(sh_sets, threshold)

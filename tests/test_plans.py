@@ -204,13 +204,11 @@ def test_drill_down_map_column_default_order_is_deterministic(spark):
 def test_metric_expr_sql_text_matches_column_api(spark):
     """r14 plan-build pin: every Metric agg's SQL text parses to the
     same result as the Column-API reference build, exact and approx,
-    including COUNT(*) vs COUNT(col) null semantics — and unquotable
-    names fall back to the Column path unchanged."""
-    from ai_etl_framework_spark.plans.aggspec import (
-        Metric,
-        _metric_expr,
-        _metric_expr_column_api,
-    )
+    including COUNT(*) vs COUNT(col) null semantics — and a backticked
+    top-level reference resolves as F.col would resolve it."""
+    from ai_etl_framework_spark.plans.aggspec import Metric, _metric_expr
+
+    from tests.column_reference import _metric_expr_column_api
 
     df = spark.createDataFrame(
         [(1, 2.0, "x"), (2, None, "x"), (3, 2.0, None), (4, 5.5, "y")],
@@ -236,8 +234,36 @@ def test_metric_expr_sql_text_matches_column_api(spark):
     # default alias comes from the text path too
     out = df.agg(_metric_expr(Metric("v", "sum"), False))
     assert out.columns == ["v_sum"]
-    # unquotable name → Column-API fallback (same error/behavior as
-    # pre-r14; here the dotted name simply doesn't resolve as SQL text)
+    # "`v.x`" is F.col's spelling of the top-level column v.x
     dotted = df.withColumnRenamed("v", "v.x")
     got = dotted.agg(_metric_expr(Metric("`v.x`", "sum"), False)).collect()[0]
     assert got[0] == 9.5
+
+
+def test_struct_path_metric_default_order(spark, tmp_path):
+    """A struct-path metric column (``st.x``) gets the default alias
+    ``st.x_sum``, a top-level name: the default ORDER BY (first metric
+    DESC) must resolve it as one, through compile_query and through
+    DashboardService.query alike."""
+    from ai_etl_framework_spark.plans import DashboardService
+    from ai_etl_framework_spark.plans.aggspec import compile_query
+
+    df = spark.createDataFrame(
+        [("a", (1.0,)), ("a", (2.0,)), ("b", (5.0,)), ("c", (None,))],
+        "g string, st struct<x: double>",
+    )
+    spec = {"group_by": ["g"], "metrics": [{"column": "st.x", "agg": "sum"}]}
+    out = compile_query(df, None, spec)
+    assert out.columns == ["g", "st.x_sum"]
+    assert [tuple(r) for r in out.collect()] == [
+        ("b", 5.0), ("a", 3.0), ("c", None),
+    ]
+
+    root = tmp_path / "acme" / "gold" / "bi" / "claims"
+    root.mkdir(parents=True)
+    df.coalesce(1).write.parquet(str(root / "claims.parquet"))
+    res = DashboardService(spark, str(tmp_path), cache_data=False).query(
+        "acme", "claims", None, spec
+    )
+    assert res["columns"] == ["g", "st.x_sum"]
+    assert [r["st.x_sum"] for r in res["records"]] == [5.0, 3.0, None]
