@@ -8,9 +8,9 @@ grouping :278-312).
 
 Design notes
 ------------
-* Exact dedup is a window `row_number() == 1` over the key — one
-  shuffle on the hash key, no driver materialization, works at any
-  scale. ``dropDuplicates`` is NOT used because the reference's
+* Exact dedup is ONE aggregation — one shuffle, no driver
+  materialization. On the whole row it groups on the columns; on key
+  columns min_by/max_by pick one row per key, because the reference's
   keep_first/keep_last/keep_best_quality need an explicit order.
 * All text hashing derives from MD5 (`F.md5`) rather than
   `F.hash`/xxhash so signatures are engine-independent — the DuckDB
@@ -31,29 +31,22 @@ from __future__ import annotations
 
 import math
 import threading
+import uuid
 from typing import Iterator, Optional, Sequence
 
 import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ai_etl_framework_spark.sqlnames import ident
+from ai_etl_framework_spark.sqlnames import ident, ref, top_level
 
 
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def record_key(df: DataFrame, match_fields: Optional[Sequence[str]] = None) -> Column:
-    """MD5 over the sorted (field, value) items — reference keys on the
-    sorted dict items (ref :212-233); we canonicalize as k=v joined
-    with 0x1f, NULL as a sentinel, fields in sorted name order."""
-    fields = sorted(match_fields or df.columns)
-    parts = [
-        F.concat_ws("=", F.lit(c), F.coalesce(F.col(c).cast("string"), F.lit("\x00null")))
-        for c in fields
-    ]
-    return F.md5(F.concat_ws("\x1f", *parts))
+MERGE_STRATEGIES = ("keep_first", "keep_last", "keep_best_quality")
 
 
 def exact_dedup(
@@ -66,9 +59,17 @@ def exact_dedup(
 ) -> DataFrame:
     """Keep one row per key. keep ∈ {keep_first, keep_last,
     keep_best_quality} (ref :314-346). Order sensitivity is explicit:
-    ``order_col`` defines "first"/"last" (SURVEY §7.4.1).
+    ``order_col`` defines "first"/"last" (SURVEY §7.4.1). An unknown
+    ``keep``, or a ``match_fields``/``order_col``/(keep_best_quality)
+    ``quality_col`` name the frame lacks, raises ``ValueError``.
 
-    Physical shape: ONE aggregation — min_by/max_by keyed by the dedup
+    **Whole row** (``match_fields`` None, empty or every column): rows
+    are duplicates when every column is equal — NULL matches NULL, NaN
+    matches NaN, ``0.0`` and ``-0.0`` differ (nested too). Each group
+    is one row repeated, so ``keep`` and the order are moot: ONE
+    HashAggregate on the columns themselves (:func:`_whole_row_dedup`).
+
+    **Key columns**: ONE aggregation — min_by/max_by keyed by the dedup
     key; partials combine map-side, so duplicates collapse before the
     shuffle — at 100 TB the shuffle carries one row per key per input
     partition instead of every input row — and AQE's skew handling
@@ -95,37 +96,28 @@ def exact_dedup(
       erased). Always used for keep_best_quality (quality ties are
       expected) and for caller-supplied orders without the uniqueness
       assertion."""
-    work = df
+    if keep not in MERGE_STRATEGIES:
+        raise ValueError(f"unknown merge strategy: {keep!r}")
     cols = df.columns
+    named = [*(match_fields or ()), *([order_col] if order_col else ()),
+             *([quality_col] if keep == "keep_best_quality" else ())]
+    have = {c.lower() for c in cols}  # Spark's default name resolution
+    missing = [n for n in named if top_level(n).lower() not in have]
+    if missing:
+        raise ValueError(f"exact_dedup: no column(s) {missing} in {cols}")
+    if not match_fields or set(match_fields) >= set(cols):
+        return _whole_row_dedup(df)
     auto_order = order_col is None
-    if auto_order:
+    if auto_order:  # ``cols`` keeps the caller's columns
         order_col = "__row_order"
-        work = work.withColumn(order_col, F.monotonically_increasing_id())
+        df = df.withColumn(order_col, F.monotonically_increasing_id())
+    ordc = F.col(order_col)
     if keep in ("keep_first", "keep_last") and (order_unique or auto_order):
         pick = F.min_by if keep == "keep_first" else F.max_by
-        ordc = F.col(order_col)
-        if match_fields:
-            gcols = list(match_fields)
-        else:
-            work = work.withColumn("__key", record_key(df, None))
-            gcols = ["__key"]
-        aggs = [
-            pick(F.col(c), ordc).alias(c) for c in cols if c not in gcols
-        ]
-        if not aggs:  # every column is a key → plain distinct
-            return work.select(*cols).distinct()
-        return work.groupBy(*gcols).agg(*aggs).select(*cols)
-    # explicit match_fields → group directly on the natural columns
-    # (cheaper than hashing: no md5 per row, and the shuffle key is the
-    # raw values). The md5 record key is only needed for the
-    # "all fields, canonical" mode where the reference hashes sorted
-    # (field, value) items.
-    if match_fields:
-        keys = [F.col(c).alias(f"__k_{c}") for c in match_fields]
-    else:
-        keys = [record_key(df, None).alias("__key")]
+        aggs = [pick(F.col(c), ordc).alias(c) for c in cols if c not in match_fields]
+        return df.groupBy(*match_fields).agg(*aggs).select(*cols)
+    keys = [F.col(c).alias(f"__k_{c}") for c in match_fields]
     row = F.struct(*[F.col(c) for c in cols])
-    ordc = F.col(order_col)
     # NULL-safe ordering: bare min_by/max_by IGNORE rows whose order
     # value is NULL, so a group where every order key is NULL returned
     # a row of all-NULL columns (silent corruption). The (null-flag,
@@ -136,7 +128,7 @@ def exact_dedup(
         picked = F.min_by(row, F.struct(ordc.isNull().cast("int"), ordc))
     elif keep == "keep_last":
         picked = F.max_by(row, F.struct(ordc.isNotNull().cast("int"), ordc))
-    elif keep == "keep_best_quality":
+    else:  # keep_best_quality
         # max quality wins, ties broken by earliest order. The same
         # NULL policy as keep_first/keep_last: a bare -quality would
         # sort NULL FIRST inside the struct comparator, so a single
@@ -148,10 +140,49 @@ def exact_dedup(
             row,
             F.struct(qc.isNull().cast("int"), -qc, ordc.isNull().cast("int"), ordc),
         )
-    else:
-        raise ValueError(f"unknown merge strategy: {keep!r}")
-    out = work.groupBy(*keys).agg(picked.alias("__row")).select("__row.*")
-    return out
+    return df.groupBy(*keys).agg(picked.alias("__row")).select("__row.*")
+
+
+def _groups_by_value(dt: T.DataType) -> bool:
+    """Whether GROUP BY compares a ``dt`` value exactly: Spark cannot
+    group on maps or variants, and its float/double keys (nested too)
+    merge ``0.0`` with ``-0.0``. A user-defined type groups on its bytes."""
+    if isinstance(dt, (T.FloatType, T.DoubleType, T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _groups_by_value(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_groups_by_value(f.dataType) for f in dt.fields)
+    return True
+
+
+def _whole_row_dedup(df: DataFrame) -> DataFrame:
+    """The whole-row branch of :func:`exact_dedup` as ONE parsed SQL
+    text (``distinct()`` raises on maps and merges ``±0.0``). A column
+    GROUP BY would not compare exactly is grouped on a one-to-one
+    rendering and returned through ``any_value``: a float on its value
+    plus a zero's sign, any other on ``to_json`` (a map compares entry
+    by entry in stored order)."""
+    keys, outs = [], []
+    for f in df.schema.fields:
+        c = ident(f.name)
+        exact = _groups_by_value(f.dataType)
+        if exact:
+            keys.append(c)
+        elif isinstance(f.dataType, (T.FloatType, T.DoubleType)):
+            keys += [c, f"CASE WHEN {c} = 0 THEN CAST({c} AS STRING) LIKE '-%' END"]
+        else:  # to_json's default timestamp patterns stop at milliseconds
+            keys.append(f"to_json({c}, map('timestampFormat', 'yyyy-MM-dd HH:mm:ss.SSSSSSXXX',"
+                        " 'timestampNTZFormat', 'yyyy-MM-dd HH:mm:ss.SSSSSS'))")
+        outs.append(c if exact else f"any_value({c}) AS {c}")
+    view = f"__exact_dedup_{uuid.uuid4().hex}"
+    df.createTempView(view)
+    try:  # the analyzed query no longer needs the view
+        return df.sparkSession.sql(
+            f"SELECT {', '.join(outs)} FROM {ident(view)} GROUP BY {', '.join(keys)}"
+        )
+    finally:
+        df.sparkSession.catalog.dropTempView(view)
 
 
 # ---------------------------------------------------------------------------
@@ -217,17 +248,12 @@ def _cache_keep_one(tag: str, df: DataFrame) -> DataFrame:
 from ai_etl_framework_spark.functions.text import tokens  # noqa: E402
 
 
-# The shingle expression as SQL text (r13): the Column-API
-# construction of this HOF tree costs ~250 py4j round trips per call
-# (each lambda is assembled element-wise through the gateway) — ~0.1 s
-# of pure plan-BUILD latency on every dd03/dd04/novelty call. Parsing
-# the identical tree from text is ONE round trip. The tree is exactly
-# the old Column build: tokens bound once via the poor-man's let
-# (get(transform(array(tokens), body), 0) — see _let_tokens), same
-# size guards, same short-doc fallbacks. Lambda variables use __
-# names so a same-named input column cannot be shadowed differently
-# than the API path (whose variables are compiler-fresh).
-# Output equality with the Column build is pinned in
+# The shingle expression as SQL text: the Column-API construction of
+# this HOF tree costs ~250 py4j round trips per call (each lambda is
+# assembled element-wise through the gateway); parsing it from text is
+# ONE. Lambda variables use __ names so an input column cannot shadow
+# them. Output equality with the Column-API reference build in
+# tests/column_reference.py is pinned in
 # tests/test_dedup_fuzzy.py::test_shingles_expr_matches_column_api.
 _SHINGLE_EXPR_TMPL = (
     "get(transform(array(coalesce(filter(split(lower({t}), '\\\\s+'), "
@@ -241,43 +267,18 @@ _SHINGLE_EXPR_TMPL = (
 )
 
 
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct k-token shingles, joined with a single space.
+def shingles(text: str, k: int = 3) -> Column:
+    """Distinct k-token shingles, joined with a single space, of the
+    column ``text`` names (``F.col``'s rules: ``"meta.text"`` is a
+    struct field).
 
-    The token array is bound once (_let_tokens): the expression
-    references it 4× (size guard, index range, slice transform,
-    short-doc fallbacks) and each textual reference would otherwise
-    inline its own split+filter tree — codegen subexpression
+    The token array is bound once (the poor-man's let of _let_tokens):
+    the expression references it 4× (size guard, index range, slice
+    transform, short-doc fallbacks) and each textual reference would
+    otherwise inline its own split+filter tree — codegen subexpression
     elimination does not dedup higher-order-function trees (the r6
-    corpus_quality lesson).
-
-    Pass a column NAME (str) to build the identical tree from SQL
-    text in one JVM parse (_SHINGLE_EXPR_TMPL) — the Column-API HOF
-    construction is ~250 py4j round trips of pure driver latency per
-    call. A Column input keeps the API construction (arbitrary input
-    expressions have no SQL text form), and so does a DOTTED name
-    (ADVICE r13: ``F.col('meta.text')`` resolves struct-field paths,
-    which a backtick-quoted text identifier would not)."""
-    if isinstance(text, str) and "." not in text:
-        return F.expr(_SHINGLE_EXPR_TMPL.format(
-            t=ident(text), k=int(k)
-        ))
-    if isinstance(text, str):
-        text = F.col(text)
-    from ai_etl_framework_spark.functions.text import _let_tokens
-
-    def body(toks: Column) -> Column:
-        n = F.size(toks)
-        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-        sh = F.when(
-            n >= k,
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")),
-        ).otherwise(
-            F.when(n > 0, F.array(F.array_join(toks, " "))).otherwise(F.array())
-        )
-        return F.array_distinct(sh)
-
-    return _let_tokens(text, body)
+    corpus_quality lesson)."""
+    return F.expr(_SHINGLE_EXPR_TMPL.format(t=ref(text), k=int(k)))
 
 
 # affine minhash family: h_i(s) = (a(s) + i·b(s)) mod P, with a = the
@@ -287,11 +288,6 @@ def shingles(text: Column | str, k: int = 3) -> Column:
 # this is ~100× less hashing than the md5-per-seed family.
 MINHASH_P = (1 << 61) - 1
 
-
-def _minhash_ab(digest: Column) -> tuple[Column, Column]:
-    a = F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
-    b = F.conv(F.substring(digest, 17, 8), 16, 10).cast("long")
-    return a, b
 
 
 def minhash_signatures(
@@ -328,7 +324,7 @@ def minhash_signatures(
     # driver work): the a/b projection + N affine-min aggregates cost
     # ~0.15 s of pure py4j socket latency per plan BUILD at 16 hashes
     # — pure driver-side cost on every call, identical analyzed plan
-    # (the SQL text is exactly _minhash_ab's tree; equality pinned in
+    # (equality with the Column-API reference build is pinned in
     # tests/test_dedup_fuzzy.py::test_minhash_exprs_match_column_api).
     sh = sh.selectExpr(
         ident(id_col),
@@ -1332,6 +1328,10 @@ class Deduplicator:
         embed_dim: int = 64,
         n_planes: int = 8,
     ) -> None:
+        if match_mode not in ("exact", "fuzzy"):
+            raise ValueError(f"unknown match_mode: {match_mode!r}")
+        if merge_strategy not in MERGE_STRATEGIES:
+            raise ValueError(f"unknown merge strategy: {merge_strategy!r}")
         self.match_mode = match_mode
         self.match_fields = match_fields
         self.similarity_threshold = similarity_threshold
@@ -1347,8 +1347,6 @@ class Deduplicator:
     def __call__(self, df: DataFrame) -> DataFrame:
         if self.match_mode == "exact":
             return exact_dedup(df, self.match_fields, self.merge_strategy, self.order_col)
-        if self.match_mode != "fuzzy":
-            raise ValueError(f"unknown match_mode: {self.match_mode!r}")
         if not self.order_col:
             raise ValueError("fuzzy mode needs order_col (a unique numeric id)")
         from ai_etl_framework_spark.functions.similarity import hyperplane_bucket

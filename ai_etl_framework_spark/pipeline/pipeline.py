@@ -20,10 +20,23 @@ from __future__ import annotations
 
 import os
 import time
+import traceback
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame
+
+
+@dataclass
+class PipelineFailure:
+    """Why a run failed: the stage that raised (``"plan"`` while the
+    transformers build the frame, ``"execute"`` while it is computed
+    and counted, ``"load[i]"`` in the i-th load), the exception's type
+    name and its formatted traceback."""
+
+    stage: str
+    error_type: str
+    traceback: str
 
 
 @dataclass
@@ -32,6 +45,7 @@ class PipelineResult:
     records_loaded: int
     stage_durations: dict[str, float] = field(default_factory=dict)
     errors: list[str] = field(default_factory=list)
+    failure: Optional[PipelineFailure] = None
 
 
 class Pipeline:
@@ -66,12 +80,13 @@ class Pipeline:
 
     def run(self) -> PipelineResult:
         durations: dict[str, float] = {}
-        errors: list[str] = []
+        stage = "plan"
         t0 = time.perf_counter()
         try:
             df = self.dataframe()
             durations["plan"] = time.perf_counter() - t0
 
+            stage = "execute"
             t1 = time.perf_counter()
             # cache for ANY destination count: records_loaded comes
             # from count() before the writes, so without the cache a
@@ -82,15 +97,16 @@ class Pipeline:
             df = df.cache()
             try:
                 count = df.count()
-                for load in self._loads:
+                for i, load in enumerate(self._loads):
+                    stage = f"load[{i}]"
                     load(df)
             finally:
                 df.unpersist()
             durations["execute"] = time.perf_counter() - t1
-            return PipelineResult(True, count, durations, errors)
+            return PipelineResult(True, count, durations)
         except Exception as e:  # noqa: BLE001 — mirrors ref's error list
-            errors.append(str(e))
-            return PipelineResult(False, 0, durations, errors)
+            failure = PipelineFailure(stage, type(e).__name__, traceback.format_exc())
+            return PipelineResult(False, 0, durations, [str(e)], failure)
 
     # -- staged mode (ref pipeline.py:345-475) --------------------------
 

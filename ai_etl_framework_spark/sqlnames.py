@@ -30,6 +30,12 @@ def ref(name: str) -> str:
     return ".".join(ident(p) for p in _name_parts(name))
 
 
+def top_level(name: str) -> str:
+    """The top-level column ``F.col(name)`` starts from: ``"st.x"`` →
+    ``"st"``, ``"`v.x`"`` → ``"v.x"``."""
+    return _name_parts(name)[0]
+
+
 def _name_parts(name: str) -> list[str]:
     """``parseAttributeName``: the name parts of a column reference.
     Raises ``ValueError`` where Spark raises a syntax error (an empty

@@ -20,6 +20,7 @@ large-result queries (q12, dd03/dd04) and documented here.
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -108,6 +109,25 @@ def _loadavg_1min():
         return None
 
 
+def _load_twin_ref(path: str) -> tuple[dict[str, float] | None, str | None]:
+    """The committed record's DuckDB twin seconds per query, read from
+    ``path`` — or ``None`` and the reason the file cannot give them
+    (missing, not JSON, or ``duckdb_twin_sec`` not a map of query name
+    to finite number)."""
+    try:
+        with open(path) as fh:
+            ref = json.load(fh)
+    except (OSError, ValueError) as ex:
+        return None, f"{type(ex).__name__}: {ex}"
+    twins = ref.get("duckdb_twin_sec") if isinstance(ref, dict) else None
+    if not isinstance(twins, dict) or not all(
+        isinstance(v, (int, float)) and not isinstance(v, bool) and math.isfinite(v)
+        for v in twins.values()
+    ):
+        return None, f"{path}: no duckdb_twin_sec map of query name to seconds"
+    return twins, None
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from ai_etl_framework_spark.session import get_spark
@@ -116,6 +136,22 @@ def main() -> None:
     # when the bench STARTED" (r10 verdict item 6) — reading at the
     # end would only measure the bench's own 32-thread load
     loadavg_start = _loadavg_1min()
+
+    # Twin-ratio self-adjudication (r14, VERDICT r13 item 3): divide
+    # this run's DuckDB twin by the committed quiet-box record's
+    # (BENCH_TWIN_REF.json). Both engines read the same parquet on the
+    # same box, so a ratio well above 1.0 on the heavyweight twins
+    # (dd03/dd04/q07/txt03) is HOST degradation stamped in-artifact —
+    # a PERF consumer separates host drift from plan changes
+    # mechanically instead of recomputing it from a prior round's
+    # artifact by hand. Read and validated HERE, before any timed
+    # loop: a malformed reference leaves the stamp out with its
+    # reason, and never costs the run's artifact.
+    ref_twins, twin_ref_error = _load_twin_ref(os.environ.get(
+        "SPARK_GRAFT_TWIN_REF",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                     "BENCH_TWIN_REF.json"),
+    ))
 
     # loadavg gate (r12, VERDICT r11 item 5): the OFFICIAL driver
     # artifact was the round's noisiest record three rounds running
@@ -486,30 +522,11 @@ def main() -> None:
             per_query[k]["warm_mean"] = round(_stats.mean(tail), 4)
             per_query[k]["warm_sd"] = round(sd, 4)
             per_query[k]["band_unresolvable"] = sd >= abs(margin)
-    # Twin-ratio self-adjudication (r14, VERDICT r13 item 3): divide
-    # this run's DuckDB twin by the committed quiet-box record's
-    # (BENCH_TWIN_REF.json). Both engines read the same parquet on the
-    # same box, so a ratio well above 1.0 on the heavyweight twins
-    # (dd03/dd04/q07/txt03) is HOST degradation stamped in-artifact —
-    # a PERF consumer separates host drift from plan changes
-    # mechanically instead of recomputing it from a prior round's
-    # artifact by hand. Additions-only: no timed loop changes.
-    twin_ref_path = os.environ.get(
-        "SPARK_GRAFT_TWIN_REF",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_TWIN_REF.json"),
-    )
-    twin_ratio_vs_committed: dict[str, float] | None = None
-    try:
-        with open(twin_ref_path) as fh:
-            _ref_twins = json.load(fh).get("duckdb_twin_sec", {})
+    twin_ratio_vs_committed = None
+    if ref_twins:
         twin_ratio_vs_committed = {
-            k: round(duck[k] / _ref_twins[k], 3)
-            for k in duck
-            if _ref_twins.get(k)
+            k: round(duck[k] / ref_twins[k], 3) for k in duck if ref_twins.get(k)
         } or None
-    except (OSError, ValueError):
-        pass  # reference missing/corrupt → the stamp is simply absent
 
     DEDUP = {"dd03_minhash_band_pairs", "dd04_ngram_jaccard"}
     ex_dedup = [k for k in duck if k not in DEDUP]
@@ -579,6 +596,7 @@ def main() -> None:
         "loadavg_retries": loadavg_retries or None,
         "loadavg_gate_max": _gate_max if _gate else None,
         "twin_ratio_vs_committed": twin_ratio_vs_committed,
+        "twin_ref_error": twin_ref_error,
     }
     # Full record → a FILE (committed per round as BENCH_r{N}_local.json)
     # and an early stdout line; the LAST stdout line is a compact
@@ -651,6 +669,7 @@ def main() -> None:
         # quiet-box record's twin, per row — host drift adjudicates
         # itself in the official artifact (see the full-record comment)
         "twin_ratio_vs_committed": twin_ratio_vs_committed,
+        "twin_ref_error": twin_ref_error,
         "full_record": os.path.basename(out_path),
     }
     print(json.dumps(compact), flush=True)

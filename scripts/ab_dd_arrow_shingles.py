@@ -71,8 +71,11 @@ def dd03_arrow():
         docs.select(F.col("doc_id"), F.col("text")), "doc_id", "text", 3)
     sig_src = sh_sets  # (doc_id, sh)
     sh = sig_src.select(F.col("doc_id"), F.explode("sh").alias("__s"))
-    a, b = dd._minhash_ab(F.md5(F.col("__s")))
-    sh = sh.select("doc_id", a.alias("__a"), b.alias("__b"))
+    sh = sh.selectExpr(
+        "doc_id",
+        "CAST(conv(substring(md5(__s), 1, 15), 16, 10) AS BIGINT) AS __a",
+        "CAST(conv(substring(md5(__s), 17, 8), 16, 10) AS BIGINT) AS __b",
+    )
     aggs = [F.min((F.col("__a") + F.lit(i) * F.col("__b")) % F.lit(dd.MINHASH_P)).alias(f"h{i}") for i in range(8)]
     sig = dd._cache_keep_one("minhash_sig", sh.groupBy("doc_id").agg(*aggs))
     banded = dd._banded_frame(sig, "doc_id", 8, 4).select(F.col("doc_id").alias("id"), "band_idx", "band_hash")

@@ -39,11 +39,12 @@ spark.sparkContext.setLogLevel("ERROR")
 docs = load_table(spark, SF_DIR, "documents")
 
 
-def shingles_native(text, k=3):
-    """Regexp-native distinct k-token shingles (same contract as
-    dedup.shingles: NULL/blank -> [], n<k -> whole-doc shingle)."""
+def shingles_native(name, k=3):
+    """Regexp-native distinct k-token shingles of column ``name`` (same
+    contract as dedup.shingles: NULL/blank -> [], n<k -> whole-doc
+    shingle)."""
     norm = F.trim(
-        F.regexp_replace(F.lower(F.coalesce(text, F.lit(""))), r"\s+", " ")
+        F.regexp_replace(F.lower(F.coalesce(F.col(name), F.lit(""))), r"\s+", " ")
     )
     n_spaces = F.length(norm) - F.length(F.translate(norm, " ", ""))
     pat = r"(?=((\S+ ){%d}\S+))\S+ " % (k - 1)
@@ -60,7 +61,7 @@ def shingles_native(text, k=3):
 def sh_sets_cur():
     return (
         widen(docs.select(F.col("doc_id").alias("id"), F.col("text").alias("__txt")))
-        .select("id", dd.shingles(F.col("__txt"), 3).alias("sh"))
+        .select("id", dd.shingles("__txt", 3).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
     )
 
@@ -68,7 +69,7 @@ def sh_sets_cur():
 def sh_sets_nat():
     return (
         widen(docs.select(F.col("doc_id").alias("id"), F.col("text").alias("__txt")))
-        .select("id", shingles_native(F.col("__txt"), 3).alias("sh"))
+        .select("id", shingles_native("__txt", 3).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
     )
 
@@ -113,10 +114,13 @@ def dd04_with(sh_builder):
 
 def dd03_with(shingle_fn):
     sh = widen(docs.select("doc_id", "text")).select(
-        F.col("doc_id"), F.explode(shingle_fn(F.col("text"), 3)).alias("__s")
+        F.col("doc_id"), F.explode(shingle_fn("text", 3)).alias("__s")
     )
-    ha, hb = dd._minhash_ab(F.md5(F.col("__s")))
-    sh = sh.select("doc_id", ha.alias("__a"), hb.alias("__b"))
+    sh = sh.selectExpr(
+        "doc_id",
+        "CAST(conv(substring(md5(__s), 1, 15), 16, 10) AS BIGINT) AS __a",
+        "CAST(conv(substring(md5(__s), 17, 8), 16, 10) AS BIGINT) AS __b",
+    )
     aggs = [
         F.min((F.col("__a") + F.lit(i) * F.col("__b")) % F.lit(dd.MINHASH_P)).alias(f"h{i}")
         for i in range(8)

@@ -59,7 +59,7 @@ def main() -> None:
     def sh_sets():
         return (
             widen(docs.select(F.col("doc_id").alias("id"), F.col("text").alias("__txt")))
-            .select("id", shingles(F.col("__txt"), 3).alias("sh"))
+            .select("id", shingles("__txt", 3).alias("sh"))
             .withColumn("n_sh", F.size("sh"))
         )
 

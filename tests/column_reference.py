@@ -1,10 +1,13 @@
-"""Column-API reference builds of the aggregate expressions that
-``operators/aggregator.py`` and ``plans/aggspec.py`` generate as SQL
-text. The library builds each expression one way (text); these
-element-wise builds are the independent oracles the text is pinned
-against, in
-tests/test_aggregator_properties.py::test_expr_sql_text_matches_column_api
-and tests/test_plans.py::test_metric_expr_sql_text_matches_column_api.
+"""Column-API reference builds of expressions the library generates
+as SQL text: the aggregates of ``operators/aggregator.py`` and
+``plans/aggspec.py``, and the shingle and minhash trees of
+``operators/dedup.py``. The library builds each expression one way
+(text); these element-wise builds are the independent oracles the text
+is pinned against, in
+tests/test_aggregator_properties.py::test_expr_sql_text_matches_column_api,
+tests/test_plans.py::test_metric_expr_sql_text_matches_column_api,
+tests/test_dedup_fuzzy.py::test_shingles_expr_matches_column_api and
+tests/test_dedup_fuzzy.py::test_minhash_exprs_match_column_api.
 """
 
 from __future__ import annotations
@@ -166,3 +169,29 @@ def _metric_expr_column_api(m: Metric, approx: bool) -> Column:
     else:  # pragma: no cover
         raise AssertionError(m.agg)
     return e.alias(m.out_name)
+
+
+def shingles_column_api(text: Column, k: int = 3) -> Column:
+    """Column-API reference build of ``operators.dedup.shingles``."""
+    from ai_etl_framework_spark.functions.text import _let_tokens
+
+    def body(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+        sh = F.when(
+            n >= k,
+            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")),
+        ).otherwise(
+            F.when(n > 0, F.array(F.array_join(toks, " "))).otherwise(F.array())
+        )
+        return F.array_distinct(sh)
+
+    return _let_tokens(text, body)
+
+
+def minhash_ab(digest: Column) -> tuple[Column, Column]:
+    """Column-API reference build of ``minhash_signatures``' affine
+    coefficients a/b, cut from an md5 hex digest."""
+    a = F.conv(F.substring(digest, 1, 15), 16, 10).cast("long")
+    b = F.conv(F.substring(digest, 17, 8), 16, 10).cast("long")
+    return a, b

@@ -277,7 +277,7 @@ def test_prefix_filter_bounded_under_boilerplate_skew(spark):
     docs = spark.createDataFrame(rows, "id long, text string")
 
     sh_sets = docs.select(
-        "id", shingles(F.col("text"), 3).alias("sh")
+        "id", shingles("text", 3).alias("sh")
     ).withColumn("n_sh", F.size("sh"))
     n_cand = prefix_filter_candidates(sh_sets, 0.5).count()
 
@@ -398,7 +398,7 @@ def test_prefix_candidate_estimate_matches_prefilter_rows(spark):
 
     rows = [(i, " ".join(f"t{(i + j) % 25}" for j in range(10))) for i in range(80)]
     docs = spark.createDataFrame(rows, "id long, text string")
-    sh_sets = docs.select("id", shingles(F.col("text"), 3).alias("sh")).withColumn(
+    sh_sets = docs.select("id", shingles("text", 3).alias("sh")).withColumn(
         "n_sh", F.size("sh")
     )
     est = prefix_candidate_estimate(sh_sets, 0.5)
@@ -541,7 +541,7 @@ def test_minhash_signatures_shingle_sets_reuse_identical(spark):
 
     rows = [(i, " ".join(f"w{(i + j) % 17}" for j in range(12))) for i in range(40)]
     docs = spark.createDataFrame(rows, "id long, text string")
-    sh_sets = docs.select("id", shingles(F.col("text"), 3).alias("sh"))
+    sh_sets = docs.select("id", shingles("text", 3).alias("sh"))
 
     from_text = {
         tuple(r) for r in minhash_signatures(docs, "id", "text", 16, 3).collect()
@@ -1002,10 +1002,9 @@ def test_minhash_exprs_match_column_api(spark):
     from ai_etl_framework_spark.operators.dedup import (
         MINHASH_P,
         _banded_frame,
-        _minhash_ab,
         minhash_signatures,
-        shingles,
     )
+    from tests.column_reference import minhash_ab, shingles_column_api
 
     docs = spark.createDataFrame(
         [
@@ -1021,9 +1020,9 @@ def test_minhash_exprs_match_column_api(spark):
 
     # Column-API reference: the pre-r13 construction, verbatim
     sh = docs.select(
-        F.col("doc_id"), F.explode(shingles(F.col("text"), 3)).alias("__s")
+        F.col("doc_id"), F.explode(shingles_column_api(F.col("text"), 3)).alias("__s")
     )
-    a, b = _minhash_ab(F.md5(F.col("__s")))
+    a, b = minhash_ab(F.md5(F.col("__s")))
     ref_sig = (
         sh.select("doc_id", a.alias("__a"), b.alias("__b"))
         .groupBy("doc_id")
@@ -1091,6 +1090,7 @@ def test_shingles_expr_matches_column_api(spark):
     duplicates, mixed whitespace (tab/newline), uppercase, and a
     backtick-hostile column name — for several k."""
     from ai_etl_framework_spark.operators.dedup import shingles
+    from tests.column_reference import shingles_column_api
 
     rows = [
         (1, None),
@@ -1110,7 +1110,7 @@ def test_shingles_expr_matches_column_api(spark):
             "id", shingles("t x", k).alias("sh")
         ).orderBy("id").collect()
         ref = df.select(
-            "id", shingles(F.col("t x"), k).alias("sh")
+            "id", shingles_column_api(F.col("t x"), k).alias("sh")
         ).orderBy("id").collect()
         assert [list(r["sh"]) for r in got] == [list(r["sh"]) for r in ref], k
 

@@ -1,6 +1,7 @@
 """The two column-name renderers: ``ident`` takes a name literally,
 ``ref`` reads it with ``F.col``'s rules — checked against ``F.col``
-itself on a frame whose names need every rule."""
+itself on a frame whose names need every rule — and ``top_level``,
+the column such a reference starts from."""
 
 from __future__ import annotations
 
@@ -8,13 +9,20 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from ai_etl_framework_spark.sqlnames import ident, ref
+from ai_etl_framework_spark.sqlnames import ident, ref, top_level
 
 
 def test_ident_quotes_one_top_level_name():
     assert ident("a") == "`a`"
     assert ident("a.b") == "`a.b`"
     assert ident("a`b") == "`a``b`"
+
+
+def test_top_level_is_the_first_name_part():
+    assert top_level("plain") == "plain"
+    assert top_level("st.`y.z`") == "st"
+    assert top_level("`v.x`") == "v.x"
+    assert top_level("`a``b`.c") == "a`b"
 
 
 @pytest.mark.parametrize("name", [
