@@ -3,9 +3,9 @@
 The reference's incremental load is append-only (file manifests); a
 CDC feed (debezium-style key + latest row) needs *upsert* semantics.
 Structured Streaming's contract for that is ``foreachBatch`` — each
-micro-batch is a plain DataFrame, so the batch ``merge_upsert``
-operator applies unchanged and the checkpoint gives exactly-once
-batch replay.
+micro-batch is a plain DataFrame, folded in by :func:`apply_cdc_batch`
+(``merge_upsert``'s anti-join + union shape, tombstones in the same
+pass), and the checkpoint gives exactly-once batch replay.
 
 Snapshot storage here is plain parquet with an atomic directory swap
 (write new snapshot → rename), the format-agnostic equivalent of a
@@ -24,8 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from ai_etl_framework_spark.operators.merge import merge_upsert
 
 
 def latest_per_key(batch: DataFrame, keys: list[str], seq_col: str) -> DataFrame:
@@ -48,27 +46,28 @@ def apply_cdc_batch(
     """Merge one CDC batch into a snapshot DataFrame.
 
     ``delete_col`` (boolean) marks tombstones: those keys are removed,
-    all other rows upsert. Two single-shuffle merges at most; the
-    tombstone side is usually tiny → AQE broadcasts its anti-join.
+    all other rows (``delete_col`` false or NULL) upsert. One merge:
+    the snapshot LEFT ANTI JOIN the keys of the batch's latest rows,
+    union the latest non-tombstone rows (without ``delete_col``; a
+    batch column the snapshot lacks is added, NULL on old rows). The
+    batch side is small, so AQE broadcasts it. Building the result runs
+    no Spark job.
+
+    NULL keys follow ``merge_upsert``: NULL never matches NULL, so a
+    NULL-key batch row never replaces or deletes a snapshot row; the
+    latest NULL-key upsert is inserted. ``row_number() == 1`` already
+    leaves one row per key, so ``merge_upsert``'s duplicate-key guard
+    could never fire here and is not run.
     """
+    missing = [k for k in keys if k not in batch.columns or k not in snapshot.columns]
+    if missing:
+        raise ValueError(f"merge keys missing from input: {missing}")
     latest = latest_per_key(batch, keys, seq_col)
+    ups = latest
     if delete_col is not None and delete_col in latest.columns:
-        dels = latest.where(F.col(delete_col))
-        ups = latest.where(~F.coalesce(F.col(delete_col), F.lit(False)))
-        # micro-batches routinely carry a delete column with zero
-        # tombstones (NULL/false everywhere) — isEmpty() on the tiny
-        # batch side is far cheaper than an anti-join pass over the
-        # whole snapshot every epoch
-        if not dels.isEmpty():
-            snapshot = merge_upsert(
-                snapshot, dels.select(*keys), keys,
-                when_matched="delete", insert_unmatched=False,
-            )
-    else:
-        ups = latest
-    return merge_upsert(snapshot, ups.drop(*(
-        [delete_col] if delete_col and delete_col in ups.columns else []
-    )), keys)
+        ups = latest.where(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
+    kept = snapshot.join(latest.select(*keys), on=keys, how="left_anti")
+    return kept.unionByName(ups, allowMissingColumns=True)
 
 
 def apply_cdc_stream(
@@ -81,7 +80,7 @@ def apply_cdc_stream(
     trigger_available_now: bool = True,
 ):
     """Run a streaming query that folds a CDC stream into a parquet
-    snapshot via foreachBatch + merge_upsert.
+    snapshot via foreachBatch + :func:`apply_cdc_batch`.
 
     Exactly-once: the sink is idempotent per epoch (same batch merged
     twice yields the same snapshot), and the checkpoint replays only

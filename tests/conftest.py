@@ -17,6 +17,31 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` -> (what ``fn()`` returned or raised, Spark jobs
+    it started), read from the status tracker through a job group of
+    its own."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        except Exception as exc:  # noqa: BLE001 — the caller asserts on it
+            out = exc
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -116,6 +116,115 @@ def test_distinct_values_search_and_truncation(orders):
     assert len(trunc["values"]) == 10
 
 
+@pytest.fixture(scope="module")
+def drill_cases(spark, orders):
+    open_ = [{"column": "o_orderstatus", "operator": "eq", "value": "O"}]
+    none = [{"column": "o_orderstatus", "operator": "eq", "value": "no-such"}]
+    with_map = orders.withColumn(
+        "props", F.create_map(F.lit("p"), F.col("o_orderpriority"))
+    )
+    mid = sorted(r[0] for r in orders.select("o_orderkey").collect())[700]
+    return {
+        "offset-past-end": (orders, dict(filters=open_, order_by="o_orderkey", offset=10**6, limit=5)),
+        "limit-0": (orders, dict(filters=open_, order_by="o_orderkey", limit=0)),
+        "keyset-after": (orders, dict(filters=open_, order_by="o_orderkey", after=mid, limit=7)),
+        "keyset-after-desc": (orders, dict(order_by="o_orderkey", order_desc=True, after=mid, limit=7)),
+        "filters-match-nothing": (orders, dict(filters=none, order_by="o_orderkey", limit=5)),
+        "no-order-by-map-column": (with_map, dict(filters=open_, limit=9, offset=3)),
+        "projection": (orders, dict(
+            filters=open_, columns=["o_orderkey", "o_totalprice"],
+            order_by="o_totalprice", order_desc=True, limit=6, offset=11,
+        )),
+        # input already sorted by the page's order: the top-k reads only
+        # offset+limit rows per partition, so the total is a count()
+        "presorted-range": (spark.range(0, 5000, 1, 4), dict(limit=10, offset=2)),
+        "presorted-frame": (
+            orders.sortWithinPartitions("o_totalprice"),
+            dict(order_by="o_totalprice", limit=5, offset=2),
+        ),
+        # Catalyst prunes the page (and its observation) to nothing
+        "range-offset-past-end": (spark.range(100), dict(offset=200, limit=5)),
+    }
+
+
+@pytest.mark.parametrize("case", [
+    "offset-past-end", "limit-0", "keyset-after", "keyset-after-desc",
+    "filters-match-nothing", "no-order-by-map-column", "projection",
+    "presorted-range", "presorted-frame", "range-offset-past-end",
+])
+def test_drill_down_total_matches_count(drill_cases, case):
+    """The total observed inside the page's action equals a separate
+    count() of the filtered rows (``after`` does not narrow it), and the
+    page itself is the sorted slice offset..offset+limit."""
+    from ai_etl_framework_spark.plans.filters import apply_filters
+
+    frame, kw = drill_cases[case]
+    out = drill_down(frame, **kw)
+    filtered = apply_filters(frame, kw.get("filters"))
+    assert out["total_count"] == filtered.count()
+    if kw.get("order_by") is not None:
+        oc = F.col(kw["order_by"])
+        rest = filtered
+        if kw.get("after") is not None:
+            rest = rest.where(oc < kw["after"] if kw.get("order_desc") else oc > kw["after"])
+        want = [
+            r[0] for r in rest.orderBy(oc.desc() if kw.get("order_desc") else oc)
+            .select(oc).collect()
+        ]
+        offset = 0 if kw.get("after") is not None else kw.get("offset", 0)
+        want = want[offset:offset + kw["limit"]]
+        assert [r[kw["order_by"]] for r in out["records"]] == want
+    else:
+        assert out["row_count"] == max(0, min(kw["limit"], out["total_count"] - kw.get("offset", 0)))
+
+
+@pytest.mark.parametrize("search,limit", [
+    (None, 100), (None, 3), (None, 0), ("%", 10), ("_", 1), ("no-such", 5), ("5", 2),
+])
+def test_distinct_values_total_matches_count(spark, search, limit):
+    """total_distinct and truncated equal a plain-Python count over the
+    same rows, with ``%``/``_`` in the search taken literally."""
+    rows = ["50%", "5_0", "500", "a_b", "axb", "50%", None, "A_B", "5x0", "%"]
+    df = spark.createDataFrame([(v,) for v in rows], "s string").repartition(3)
+    out = distinct_values(df, "s", search=search, limit=limit)
+    want = sorted({
+        v for v in rows
+        if v is not None and (not search or search.lower() in v.lower())
+    })
+    assert out["total_distinct"] == len(want)
+    assert out["truncated"] == (len(want) > limit)
+    assert out["values"] == want[:limit]
+
+
+def test_pages_run_one_spark_job(orders, jobs_of):
+    """A drill-down page is one Spark job and a filter-values call at
+    most two (the distinct's shuffle and the top-k): the totals ride the
+    page's own action. Misuse raises before any job starts."""
+    open_ = [{"column": "o_orderstatus", "operator": "eq", "value": "O"}]
+    pages = [
+        dict(filters=open_, order_by="o_orderkey", limit=10),
+        dict(filters=open_, order_by="o_totalprice", order_desc=True, offset=30, limit=5),
+        dict(filters=open_, columns=["o_orderkey", "o_orderdate"], limit=10),
+        dict(order_by="o_orderkey", after=100, limit=5),
+    ]
+    for kw in pages:
+        out, jobs = jobs_of(lambda: drill_down(orders, **kw))
+        assert out["row_count"] > 0 and jobs == 1, (kw, jobs)
+    for kw in (dict(column="o_orderpriority"), dict(column="o_custkey", limit=10),
+               dict(column="o_orderpriority", search="URG")):
+        out, jobs = jobs_of(lambda: distinct_values(orders, **kw))
+        assert out["total_distinct"] > 0 and jobs <= 2, (kw, jobs)
+    misuse = [
+        lambda: drill_down(orders, limit=-1),
+        lambda: drill_down(orders, order_by="o_orderkey", offset=-5),
+        lambda: drill_down(orders, filters=open_, after=3),
+        lambda: distinct_values(orders, "o_orderpriority", limit=-1),
+    ]
+    for call in misuse:
+        out, jobs = jobs_of(call)
+        assert isinstance(out, ValueError) and jobs == 0, (out, jobs)
+
+
 # -- schema profiling ---------------------------------------------------
 
 

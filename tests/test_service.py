@@ -8,12 +8,6 @@ import os
 
 import pytest
 
-# r14 driver-tier split (VERDICT r13 item 1): this suite is
-# hypothesis/differential/e2e-heavy and runs in the SLOW tier
-# (`pytest -m slow`); the driver's default `pytest tests/` keeps
-# the contract/pin/parity suites inside its verify window.
-pytestmark = pytest.mark.slow
-
 from ai_etl_framework_spark.errors import ReadError
 from ai_etl_framework_spark.plans import DashboardService
 
