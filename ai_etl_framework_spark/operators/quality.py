@@ -36,12 +36,6 @@ from ai_etl_framework_spark.sqlnames import ident
 ID_EXACT = {"id", "user_id", "customer_id"}
 
 
-def _nullish(c: Column, dt: T.DataType) -> Column:
-    if isinstance(dt, T.StringType):
-        return c.isNull() | (c == "")
-    return c.isNull()
-
-
 def _is_numeric(dt: T.DataType) -> bool:
     return isinstance(
         dt,
@@ -61,8 +55,9 @@ def quality_expressions(df: DataFrame) -> dict[str, Column]:
     per-field when-trees cost ~400 py4j round trips ≈ 340 ms of pure
     plan-build latency per call on a 9-column frame — 65% of the p01
     pipeline's whole timed region at sf0.1. The text generator below
-    mirrors :func:`_quality_expressions_column_api` (kept verbatim as
-    the reference implementation) check for check; literal suffixes
+    mirrors the Column-API build kept as the test oracle in
+    tests/column_reference.py (``quality_expressions_column_api``)
+    check for check; literal suffixes
     matter (bare ``0.0`` parses as DECIMAL in Spark SQL — every float
     literal carries ``D``). Equality across dtypes/edge rows is pinned
     by tests/test_quality.py::test_quality_sql_text_matches_column_api
@@ -156,92 +151,6 @@ def quality_expressions(df: DataFrame) -> dict[str, Column]:
         if val_num
         else F.lit(1.0)
     )
-
-    score = completeness * 0.4 + validity * 0.3 + consistency * 0.3
-    return {
-        "completeness": completeness,
-        "validity": validity,
-        "consistency": consistency,
-        "quality_score": score,
-    }
-
-
-def _quality_expressions_column_api(df: DataFrame) -> dict[str, Column]:
-    """Column-API reference build of the same expressions — the
-    pre-r13 construction, kept verbatim so the SQL-text generator
-    above has an executable spec to be pinned against."""
-    fields = df.schema.fields
-    n = len(fields)
-
-    # -- completeness -------------------------------------------------
-    complete = [F.when(_nullish(F.col(f.name), f.dataType), 0.0).otherwise(1.0) for f in fields]
-    completeness = sum(complete[1:], complete[0]) / F.lit(float(n)) if n else F.lit(0.0)
-
-    # -- validity -----------------------------------------------------
-    val_num: list[Column] = []   # sum of check scores
-    val_den: list[Column] = []   # number of checks (varies per row!)
-    for f in fields:
-        c = F.col(f.name)
-        nullish = _nullish(c, f.dataType)
-        if isinstance(f.dataType, T.StringType):
-            length = F.length(c)
-            length_check = (
-                F.when(nullish, 1.0)
-                .when(length > 10000, 0.0)
-                .when(length > 1000, 0.5)
-                .otherwise(1.0)
-            )
-            val_num.append(length_check)
-            val_den.append(F.lit(1.0))
-            if "email" in f.name.lower():
-                # second check appended only when non-null (ref :226-233)
-                email_ok = c.contains("@") & c.contains(".")
-                val_num.append(F.when(nullish, 0.0).otherwise(F.when(email_ok, 1.0).otherwise(0.0)))
-                val_den.append(F.when(nullish, 0.0).otherwise(1.0))
-        elif _is_numeric(f.dataType):
-            val_num.append(F.when(nullish | (F.abs(c) <= 1e15), 1.0).otherwise(0.0))
-            val_den.append(F.lit(1.0))
-        else:
-            val_num.append(F.lit(1.0))
-            val_den.append(F.lit(1.0))
-    validity = (
-        sum(val_num[1:], val_num[0]) / sum(val_den[1:], val_den[0]) if val_num else F.lit(1.0)
-    )
-
-    # -- consistency --------------------------------------------------
-    cons: list[Column] = []
-    for f in fields:
-        c = F.col(f.name)
-        nullish = _nullish(c, f.dataType)
-        low = f.name.lower()
-        if "age" in low:
-            check = (
-                F.when(nullish, 1.0).when((c > 0) & (c < 150), 1.0).otherwise(0.0)
-                if _is_numeric(f.dataType)
-                else F.when(nullish, 1.0).otherwise(0.0)
-            )
-        elif ("salary" in low) or ("price" in low):
-            check = (
-                F.when(nullish, 1.0).when(c > 0, 1.0).otherwise(0.0)
-                if _is_numeric(f.dataType)
-                else F.when(nullish, 1.0).otherwise(0.0)
-            )
-        elif low in ID_EXACT:
-            check = (
-                F.when(nullish, 1.0).when(c >= 0, 1.0).otherwise(0.5)
-                if _is_integer(f.dataType)
-                else F.when(nullish, 1.0).otherwise(0.5)  # non-int id → 0.5 (ref :287-289)
-            )
-        elif "email" in low:
-            check = (
-                F.when(nullish, 1.0).otherwise(1.0)
-                if isinstance(f.dataType, T.StringType)
-                else F.when(nullish, 1.0).otherwise(0.0)  # email must be string (ref :292-297)
-            )
-        else:
-            check = F.lit(1.0)
-        cons.append(check)
-    consistency = sum(cons[1:], cons[0]) / F.lit(float(n)) if cons else F.lit(1.0)
 
     score = completeness * 0.4 + validity * 0.3 + consistency * 0.3
     return {

@@ -43,14 +43,15 @@ overwhelmingly common case — are boundary-independent.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ai_etl_framework_spark.pipeline.monitor import IncrementalStore
 
 __all__ = ["IncrementalCorpusIngest"]
 
 
-class IncrementalCorpusIngest:
+class IncrementalCorpusIngest(IncrementalStore):
     """Owns the silver corpus directory and its two dedup side
     stores, and processes document batches through clean → exact
     dedup → near dedup → append.
@@ -65,6 +66,11 @@ class IncrementalCorpusIngest:
     must stay fixed for the lifetime of the store (band hashes are
     only comparable under one signature scheme — same contract as any
     persisted LSH index).
+
+    The three stores are appended per batch, not folded and swapped,
+    so this service takes only the stream and loop drivers and the
+    Hadoop-FS store read from :class:`IncrementalStore`, and sets up
+    its own layout instead of the base's single ``store_dir``.
     """
 
     def __init__(
@@ -129,12 +135,6 @@ class IncrementalCorpusIngest:
         )
         return batch.join(losers, on=self.id_col, how="left_anti")
 
-    def _read_or_none(self, path: str) -> Optional[DataFrame]:
-        # _spark_metadata-free plain parquet dirs; absence = empty store
-        if not os.path.isdir(path):
-            return None
-        return self.spark.read.parquet(path)
-
     def seed_history(self, history: DataFrame) -> None:
         """Initialize the stores from an existing corpus (one-time
         backfill): writes silver + both side stores."""
@@ -160,8 +160,8 @@ class IncrementalCorpusIngest:
         cleaned = batch.withColumn(
             self.text_col, clean_text(F.col(self.text_col))
         )
-        fp_store = self._read_or_none(self.fp_dir)
-        band_store = self._read_or_none(self.band_dir)
+        fp_store = self._read(self.fp_dir)
+        band_store = self._read(self.band_dir)
         accepted = cleaned
         if fp_store is not None:
             accepted = dedup_against_history(
@@ -198,44 +198,6 @@ class IncrementalCorpusIngest:
         accepted.write.mode("append").parquet(self.silver_dir)
         self._fp_frame(accepted).write.mode("append").parquet(self.fp_dir)
         self._band_frame(accepted).write.mode("append").parquet(self.band_dir)
-
-    # -- drivers ----------------------------------------------------
-
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        """Drive the per-batch pipeline over a file-source stream to
-        completion (Trigger.AvailableNow). ``max_files_per_trigger=1``
-        makes each bronze file its own micro-batch — the incremental
-        shape; raise it for bulk backfills."""
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"incremental ingest stream did not finish in {timeout_sec}s"
-            )
-
-    def run_batches(self, batches) -> None:
-        """Batch twin of :meth:`run_stream`: the same per-batch
-        pipeline over an explicit batch sequence (stream-vs-batch
-        equality is pinned in tests)."""
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
 
     def silver(self) -> DataFrame:
         return self.spark.read.parquet(self.silver_dir)

@@ -1,28 +1,42 @@
-"""Incremental streaming burst monitor — the production form of
-operators/timeseries.burst_detection: an event stream updates a
-persisted (key, bucket, n) COUNT store per micro-batch, and the alert
-table is recomputed from the store's trailing windows — so the
-monitor sees corpus-lifetime baselines, not just the current batch.
+"""Incremental streaming services: each folds an event stream, one
+micro-batch at a time, into a persisted keyed store, and answers its
+readouts from that store — so a readout sees every event the service
+has seen, not just the current batch.
 
-The store is ADDITIVE (per-bucket counts sum across batches), which
-makes the final state — and therefore ``alerts()`` — independent of
-micro-batch BOUNDARIES entirely: after any partition of the same
-events into batches, ``alerts()`` equals the batch operator
-``burst_detection`` over the full event set (pinned in
-tests/test_burst_monitor.py). That is a stronger determinism
-guarantee than the dedup loops can offer (their survivor choice is
-order-dependent by nature); it is why the st04 registry row carries a
-REAL hash oracle (the x61 SQL) rather than a rows-only check.
+Every service subclasses :class:`IncrementalStore`, which owns the
+store contract:
 
-Scale shape: each micro-batch is one batch-sized hash aggregation +
-a store-sized merge aggregation; the store is (keys × observed
-buckets) — dimension-sized by construction, never event-scale. The
-merged store is localCheckpointed before the overwrite (reading and
-rewriting the same path in one lazy plan is the classic
-read-your-own-write corruption; the checkpoint materializes first —
-the ingest.py precedent, and the store is bounded so the checkpoint
-is too). Alerts run :func:`burst_flags` — one key-partitioned window
-over the store."""
+- **Any Hadoop filesystem.** The store lives at ``root/<name>`` and is
+  found, read and replaced through the Hadoop FileSystem API
+  (``streaming/cdc.py``'s helpers, as in ``sinks/compaction.py``), so a
+  ``file://``, ``hdfs://`` or ``s3a://`` root behaves like a plain path.
+- **Write next, then swap.** A batch never overwrites the store it
+  reads. The merged store is written to the sibling ``<name>.next`` and
+  swapped in with two checked renames; a crash between them leaves the
+  previous store as ``<name>.old``, which the next read restores.
+- **One fold.** A service supplies the batch's partial frame and the
+  merge of (store ∪ partial); the base folds, writes and swaps. The
+  first batch writes its partial frame as is.
+- **One driver.** :meth:`IncrementalStore.run_stream` drives
+  ``process_batch`` under ``foreachBatch`` with
+  ``Trigger.AvailableNow``; :meth:`IncrementalStore.run_batches` is its
+  plain-loop twin.
+
+Every store is MERGEABLE — additive counts and sums, min/max with
+position keys, or an idempotent distinct — so the final store, and
+every readout, is independent of micro-batch BOUNDARIES: after any
+partition of the same events into batches it equals the batch operator
+over the full event set. That is why the st04–st11 registry rows carry
+REAL hash oracles rather than rows-only checks. Additive stores (burst,
+OHLC volume, quantile bins, CUSUM moments, category cells, heavy
+hitters) do NOT absorb at-least-once replays: pair them with upstream
+exactly-once file semantics or an id-dedup stage. The activity store
+is union + distinct, so a replayed batch changes nothing.
+
+Scale shape per batch: one batch-sized aggregation plus one
+store-sized merge; every store is dimension-bounded (keys × observed
+buckets, bins or days), never event-scale.
+"""
 
 from __future__ import annotations
 
@@ -31,6 +45,12 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ai_etl_framework_spark.streaming.cdc import (
+    _exists,
+    _recover_interrupted_swap,
+    _swap,
+)
+
 __all__ = [
     "IncrementalBurstMonitor",
     "IncrementalOhlcStore",
@@ -38,79 +58,61 @@ __all__ = [
     "IncrementalQuantiles",
     "IncrementalCusumMonitor",
     "IncrementalCategoryMix",
+    "IncrementalHeavyHitters",
 ]
 
 
-class IncrementalBurstMonitor:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        key_col: str = "event_type",
-        ts_col: str = "ts",
-        bucket_unit: str = "hour",
-        trailing: int = 24,
-        factor: float = 3.0,
-        min_baseline_buckets: int = 3,
-    ) -> None:
-        if bucket_unit not in ("minute", "hour", "day", "week", "month"):
-            raise ValueError(f"unsupported bucket_unit {bucket_unit!r}")
+def _check_bucket_unit(bucket_unit: str) -> None:
+    if bucket_unit not in ("minute", "hour", "day", "week", "month"):
+        raise ValueError(f"unsupported bucket_unit {bucket_unit!r}")
+
+
+class IncrementalStore:
+    """Base of the foreachBatch services: the store at ``store_dir``,
+    its read, the fold that replaces it per batch, and the stream and
+    plain-loop drivers.
+
+    A subclass supplies ``_partial(batch)`` (the batch's contribution,
+    in the store's columns) and ``_merge(both)`` (store ∪ partial
+    reduced back to one row per store key), plus its readouts.
+    """
+
+    def __init__(self, spark: SparkSession, root: str, store_name: str) -> None:
         self.spark = spark
         self.root = root
-        self.key_col = key_col
-        self.ts_col = ts_col
-        self.bucket_unit = bucket_unit
-        self.trailing = trailing
-        self.factor = factor
-        self.min_baseline_buckets = min_baseline_buckets
-        self.store_dir = os.path.join(root, "bucket_counts")
+        self.store_dir = os.path.join(root, store_name)
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
+    def _read(self, path: str) -> Optional[DataFrame]:
+        """The parquet dataset at ``path``, or None when it does not
+        exist — after restoring a swap that died between its renames."""
+        _recover_interrupted_swap(self.spark, path)
+        if not _exists(self.spark, path):
             return None
-        return self.spark.read.parquet(self.store_dir)
+        return self.spark.read.parquet(path)
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Aggregate the batch to (key, bucket, n) and MERGE into the
-        store (counts add). Runs identically under foreachBatch and in
-        a plain loop."""
-        counts = (
-            batch.where(
-                F.col(self.key_col).isNotNull()
-                & F.col(self.ts_col).isNotNull()
-            )
-            .groupBy(
-                F.col(self.key_col),
-                F.date_trunc(self.bucket_unit, F.col(self.ts_col)).alias(
-                    "bucket"
-                ),
-            )
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        store = self._store()
-        merged = (
-            counts if store is None else store.unionByName(counts)
-        ).groupBy(self.key_col, "bucket").agg(
-            F.sum("n").cast("long").alias("n")
-        )
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.store_dir)
-
-    def alerts(self) -> DataFrame:
-        """Burst table over the CURRENT store state — identical to
-        batch burst_detection over every event the monitor has seen."""
-        from ai_etl_framework_spark.operators.timeseries import burst_flags
-
-        store = self._store()
+    def _store(self) -> DataFrame:
+        store = self._read(self.store_dir)
         if store is None:
             raise ValueError("no events processed yet: store is empty")
-        return burst_flags(
-            store,
-            self.key_col,
-            trailing=self.trailing,
-            factor=self.factor,
-            min_baseline_buckets=self.min_baseline_buckets,
-        )
+        return store
+
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+        """Fold one batch into the store: merge its partial frame with
+        the current store, write the result beside the store and swap
+        it in. Runs identically under foreachBatch and in a plain
+        loop."""
+        part = self._partial(batch)
+        store = self._read(self.store_dir)
+        merged = part if store is None else self._merge(store.unionByName(part))
+        nxt = self.store_dir + ".next"
+        merged.write.mode("overwrite").parquet(nxt)
+        _swap(self.spark, nxt, self.store_dir)
 
     def run_stream(
         self,
@@ -120,8 +122,15 @@ class IncrementalBurstMonitor:
         max_files_per_trigger: int = 1,
         timeout_sec: int = 300,
     ) -> None:
-        """Drive the loop over a file-source stream to completion
-        (Trigger.AvailableNow)."""
+        """Drive :meth:`process_batch` over a parquet file-source
+        stream to completion (Trigger.AvailableNow).
+        ``max_files_per_trigger=1`` makes each bronze file its own
+        micro-batch — the incremental shape; raise it for bulk
+        backfills. Raises TimeoutError naming the service when the
+        stream has not finished in ``timeout_sec``, and ValueError before
+        the stream starts when ``timeout_sec`` is not positive."""
+        if timeout_sec <= 0:
+            raise ValueError(f"timeout_sec must be > 0, got {timeout_sec}")
         stream = (
             self.spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -136,15 +145,81 @@ class IncrementalBurstMonitor:
         if not q.awaitTermination(timeout_sec):
             q.stop()
             raise TimeoutError(
-                f"burst monitor stream did not finish in {timeout_sec}s"
+                f"{type(self).__name__} stream did not finish in {timeout_sec}s"
             )
 
     def run_batches(self, batches) -> None:
+        """Batch twin of :meth:`run_stream`: the same per-batch fold
+        over an explicit batch sequence."""
         for i, b in enumerate(batches):
             self.process_batch(b, i)
 
 
-class IncrementalOhlcStore:
+class IncrementalBurstMonitor(IncrementalStore):
+    """Streaming burst monitor — the production form of
+    operators/timeseries.burst_detection: each batch adds its
+    (key, bucket, n) counts to the store, and ``alerts()`` runs
+    :func:`burst_flags` (one key-partitioned window) over the store's
+    trailing windows, so the monitor sees corpus-lifetime baselines.
+    The counts are additive, so ``alerts()`` equals batch
+    ``burst_detection`` over every event seen (pinned in
+    tests/test_burst_monitor.py; the st04 row carries x61's oracle)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        key_col: str = "event_type",
+        ts_col: str = "ts",
+        bucket_unit: str = "hour",
+        trailing: int = 24,
+        factor: float = 3.0,
+        min_baseline_buckets: int = 3,
+    ) -> None:
+        _check_bucket_unit(bucket_unit)
+        super().__init__(spark, root, "bucket_counts")
+        self.key_col = key_col
+        self.ts_col = ts_col
+        self.bucket_unit = bucket_unit
+        self.trailing = trailing
+        self.factor = factor
+        self.min_baseline_buckets = min_baseline_buckets
+
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        return (
+            batch.where(
+                F.col(self.key_col).isNotNull()
+                & F.col(self.ts_col).isNotNull()
+            )
+            .groupBy(
+                F.col(self.key_col),
+                F.date_trunc(self.bucket_unit, F.col(self.ts_col)).alias(
+                    "bucket"
+                ),
+            )
+            .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        )
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy(self.key_col, "bucket").agg(
+            F.sum("n").cast("long").alias("n")
+        )
+
+    def alerts(self) -> DataFrame:
+        """Burst table over the CURRENT store state — identical to
+        batch burst_detection over every event the monitor has seen."""
+        from ai_etl_framework_spark.operators.timeseries import burst_flags
+
+        return burst_flags(
+            self._store(),
+            self.key_col,
+            trailing=self.trailing,
+            factor=self.factor,
+            min_baseline_buckets=self.min_baseline_buckets,
+        )
+
+
+class IncrementalOhlcStore(IncrementalStore):
     """Streaming OHLC candle service — the incremental twin of
     operators/timeseries.ohlc_bars: each micro-batch folds its ticks
     into a persisted per-(key, bucket) candle store. Every candle
@@ -158,8 +233,7 @@ class IncrementalOhlcStore:
     Store columns: (key, bucket, open_k, open, high, low, close_k,
     close, volume, n) — the position keys stay INSIDE the store;
     ``candles()`` projects the public OHLC shape with the operator's
-    rounding. Scale: batch-sized candle agg + store-sized merge agg
-    per batch; the store is (keys × observed buckets)."""
+    rounding."""
 
     def __init__(
         self,
@@ -171,23 +245,15 @@ class IncrementalOhlcStore:
         tiebreak_col: str = "event_id",
         bucket_unit: str = "hour",
     ) -> None:
-        if bucket_unit not in ("minute", "hour", "day", "week", "month"):
-            raise ValueError(f"unsupported bucket_unit {bucket_unit!r}")
-        self.spark = spark
-        self.root = root
+        _check_bucket_unit(bucket_unit)
+        super().__init__(spark, root, "candles")
         self.key_col = key_col
         self.ts_col = ts_col
         self.value_col = value_col
         self.tiebreak_col = tiebreak_col
         self.bucket_unit = bucket_unit
-        self.store_dir = os.path.join(root, "candles")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def _batch_candles(self, batch: DataFrame) -> DataFrame:
+    def _partial(self, batch: DataFrame) -> DataFrame:
         from ai_etl_framework_spark.operators.timeseries import _pos_key
 
         k = _pos_key(self.ts_col, self.tiebreak_col)
@@ -216,12 +282,8 @@ class IncrementalOhlcStore:
             )
         )
 
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        part = self._batch_candles(batch)
-        store = self._store()
-        merged = (
-            part if store is None else store.unionByName(part)
-        ).groupBy(self.key_col, "bucket").agg(
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy(self.key_col, "bucket").agg(
             F.min("open_k").alias("open_k"),
             F.min_by(F.col("open"), F.col("open_k")).alias("open"),
             F.max("high").alias("high"),
@@ -231,16 +293,11 @@ class IncrementalOhlcStore:
             F.sum("volume").alias("volume"),
             F.sum("n").cast("long").alias("n"),
         )
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.store_dir)
 
     def candles(self) -> DataFrame:
         """Public OHLC table over the store — the ohlc_bars shape and
         rounding."""
-        store = self._store()
-        if store is None:
-            raise ValueError("no ticks processed yet: store is empty")
-        return store.select(
+        return self._store().select(
             self.key_col,
             "bucket",
             F.round("open", 6).alias("open"),
@@ -251,37 +308,8 @@ class IncrementalOhlcStore:
             "n",
         )
 
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"ohlc store stream did not finish in {timeout_sec}s"
-            )
 
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
-
-
-class IncrementalActiveUsers:
+class IncrementalActiveUsers(IncrementalStore):
     """Streaming rolling-active-users service — the incremental twin
     of operators/activity.rolling_active_users: each micro-batch
     collapses to its distinct (user, day) pairs and MERGES into a
@@ -294,11 +322,10 @@ class IncrementalActiveUsers:
     therefore carries x86's REAL hash oracle (which is itself the
     NAIVE per-day COUNT DISTINCT definition).
 
-    Scale shape per batch: one batch-sized distinct + one store-sized
-    distinct merge; the store is the (users × active days) frame —
-    the same frame ANY correct rolling-distinct needs, persisted once
-    instead of recomputed per refresh. Compact it on the maintenance
-    cadence like the dedup stores."""
+    The store is the (users × active days) frame — the same frame ANY
+    correct rolling-distinct needs, persisted once instead of
+    recomputed per refresh. Compact it on the maintenance cadence like
+    the dedup stores."""
 
     def __init__(
         self,
@@ -310,20 +337,13 @@ class IncrementalActiveUsers:
     ) -> None:
         if window_days < 1:
             raise ValueError(f"window_days must be >= 1, got {window_days}")
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, "active_days")
         self.user_col = user_col
         self.ts_col = ts_col
         self.window_days = window_days
-        self.store_dir = os.path.join(root, "active_days")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        days = (
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        return (
             batch.where(
                 F.col(self.user_col).isNotNull()
                 & F.col(self.ts_col).isNotNull()
@@ -334,12 +354,9 @@ class IncrementalActiveUsers:
             )
             .distinct()
         )
-        store = self._store()
-        merged = (
-            days if store is None else store.unionByName(days).distinct()
-        )
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.store_dir)
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.distinct()
 
     def curve(self) -> DataFrame:
         """(day, active_users) over everything seen — identical to the
@@ -348,10 +365,7 @@ class IncrementalActiveUsers:
             rolling_active_from_days,
         )
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
-        return rolling_active_from_days(store, self.window_days)
+        return rolling_active_from_days(self._store(), self.window_days)
 
     def new_returning(self) -> DataFrame:
         """New-vs-returning decomposition over everything seen — the
@@ -363,64 +377,25 @@ class IncrementalActiveUsers:
             new_returning_from_days,
         )
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
         # the store's frame is (u, d); the seam's contract is (u, day)
         return new_returning_from_days(
-            store.select("u", F.col("d").alias("day"))
+            self._store().select("u", F.col("d").alias("day"))
         )
 
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"active-users stream did not finish in {timeout_sec}s"
-            )
 
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
-
-
-class IncrementalQuantiles:
+class IncrementalQuantiles(IncrementalStore):
     """Streaming latency/value-quantile service — the incremental twin
     of operators/scaling.binned_quantiles: each micro-batch bins its
     values to ``floor(v/width)`` and MERGES the counts into a
-    persisted (key, bin, n) histogram store. Bin counts are ADDITIVE
-    (sum is commutative+associative), so the store — and therefore
-    ``quantiles()`` — is independent of micro-batch boundaries: after
-    any partition of the same events into batches it equals the batch
-    operator over the full set (the st04 argument), which is why the
-    st07 registry row carries a REAL hash oracle (x95's SQL). Like
-    st04/st05 (and unlike st06's idempotent distinct store), additive
-    counts do NOT absorb at-least-once replays — pair with upstream
-    exactly-once file semantics or an id-dedup stage.
+    persisted (key, bin, n) histogram store. Bin counts are ADDITIVE,
+    so ``quantiles()`` equals the batch operator over the full event
+    set after any batch split (the st07 registry row carries x95's
+    REAL hash oracle).
 
     ``quantiles()`` runs :func:`quantiles_from_bins` — the SAME code
     path the batch operator uses (the rolling_active_from_days seam).
-
-    Scale shape per batch: one batch-sized hash aggregation + one
-    store-sized merge; the store is |keys|·(value range/width) rows —
-    bounded by the DOMAIN, not the corpus, so it never compacts."""
+    The store is |keys|·(value range/width) rows — bounded by the
+    DOMAIN, not the corpus, so it never compacts."""
 
     def __init__(
         self,
@@ -433,23 +408,14 @@ class IncrementalQuantiles:
     ) -> None:
         if width <= 0:
             raise ValueError(f"width must be > 0, got {width}")
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, "value_bins")
         self.value_col = value_col
         self.key_col = key_col
         self.width = width
         self.qs = qs
-        self.store_dir = os.path.join(root, "value_bins")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        """Bin the batch and MERGE into the store (counts add). Runs
-        identically under foreachBatch and in a plain loop."""
-        bins = (
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        return (
             batch.where(
                 F.col(self.key_col).isNotNull()
                 & F.col(self.value_col).isNotNull()
@@ -462,14 +428,11 @@ class IncrementalQuantiles:
             )
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        store = self._store()
-        merged = (
-            bins if store is None else store.unionByName(bins)
-        ).groupBy(self.key_col, "bin").agg(
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy(self.key_col, "bin").agg(
             F.sum("n").cast("long").alias("n")
         )
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.store_dir)
 
     def quantiles(self) -> DataFrame:
         """Quantile table over the CURRENT store — identical to batch
@@ -478,57 +441,20 @@ class IncrementalQuantiles:
             quantiles_from_bins,
         )
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
         return quantiles_from_bins(
-            store, self.width, self.qs, key_col=self.key_col
+            self._store(), self.width, self.qs, key_col=self.key_col
         )
 
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"quantile service stream did not finish in {timeout_sec}s"
-            )
 
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
-
-
-class IncrementalCusumMonitor:
+class IncrementalCusumMonitor(IncrementalStore):
     """Streaming CUSUM drift monitor — the incremental twin of
     operators/timeseries.cusum_screen: each micro-batch folds its
     per-(key, bucket) value SUMS and COUNTS into a persisted store
     (both additive ⇒ the bucket MEAN sum/n re-derives exactly), and
     ``screen()`` runs cusum_from_series over the store's mean series —
     the same code path as the batch operator, so the st08 registry
-    row carries x96's REAL hash oracle. Boundary-independent like
-    st04/st05/st07; additive sums do NOT absorb at-least-once replays
-    (same caveat).
-
-    Scale shape per batch: one batch-sized hash aggregation + one
-    store-sized merge; the store is (keys × observed buckets) — the
-    burst monitor's bound."""
+    row carries x96's REAL hash oracle. The store is (keys × observed
+    buckets) — the burst monitor's bound."""
 
     def __init__(
         self,
@@ -541,25 +467,17 @@ class IncrementalCusumMonitor:
         slack: float = 0.5,
         threshold: float = 4.0,
     ) -> None:
-        if bucket_unit not in ("minute", "hour", "day", "week", "month"):
-            raise ValueError(f"unsupported bucket_unit {bucket_unit!r}")
-        self.spark = spark
-        self.root = root
+        _check_bucket_unit(bucket_unit)
+        super().__init__(spark, root, "bucket_moments")
         self.value_col = value_col
         self.key_col = key_col
         self.ts_col = ts_col
         self.bucket_unit = bucket_unit
         self.slack = slack
         self.threshold = threshold
-        self.store_dir = os.path.join(root, "bucket_moments")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        moments = (
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        return (
             batch.where(
                 F.col(self.key_col).isNotNull()
                 & F.col(self.ts_col).isNotNull()
@@ -576,14 +494,11 @@ class IncrementalCusumMonitor:
                 F.count(F.lit(1)).cast("long").alias("n"),
             )
         )
-        store = self._store()
-        merged = (
-            moments if store is None else store.unionByName(moments)
-        ).groupBy(self.key_col, "bucket").agg(
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy(self.key_col, "bucket").agg(
             F.sum("s").alias("s"), F.sum("n").cast("long").alias("n")
         )
-        merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(self.store_dir)
 
     def screen(self) -> DataFrame:
         """CUSUM table over the CURRENT store — identical to batch
@@ -596,10 +511,7 @@ class IncrementalCusumMonitor:
             cusum_from_series,
         )
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
-        series = store.select(
+        series = self._store().select(
             self.key_col,
             "bucket",
             (F.col("s") / F.col("n")).alias("__x"),
@@ -609,56 +521,21 @@ class IncrementalCusumMonitor:
             threshold=self.threshold,
         )
 
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"cusum monitor stream did not finish in {timeout_sec}s"
-            )
 
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
-
-
-class IncrementalCategoryMix:
+class IncrementalCategoryMix(IncrementalStore):
     """Streaming categorical-mix drift service — the incremental twin
     of operators/drift.jsd_drift: each micro-batch collapses to its
     (period, category) counts and MERGES them additively into a
-    persisted cell store (sum is commutative + associative, the st04
-    argument), so ``jsd()`` — which runs
+    persisted cell store, so ``jsd()`` — which runs
     :func:`~ai_etl_framework_spark.operators.drift.jsd_from_cells`,
-    the SAME core the batch operator uses — is independent of
-    micro-batch boundaries and equals the batch operator over every
-    event seen. The st09 registry row therefore carries x121's REAL
-    hash oracle. Like st04/st05/st07 (and unlike st06's idempotent
-    distinct store), additive counts do NOT absorb at-least-once
-    replays — pair with upstream exactly-once file semantics or an
-    id-dedup stage.
+    the SAME core the batch operator uses — equals the batch operator
+    over every event seen. The st09 registry row therefore carries
+    x121's REAL hash oracle.
 
-    Scale shape per batch: one batch-sized (period, category) hash
-    aggregation + one store-sized merge aggregation; the store is the
-    periods × categories cell frame — dimension-bounded by
-    construction, persisted once instead of recomputed per refresh.
-    Compact it on the maintenance cadence like the dedup stores."""
+    The store is the periods × categories cell frame —
+    dimension-bounded by construction, persisted once instead of
+    recomputed per refresh. Compact it on the maintenance cadence like
+    the dedup stores."""
 
     def __init__(
         self,
@@ -668,20 +545,13 @@ class IncrementalCategoryMix:
         ts_col: str = "ts",
         bucket_unit: str = "day",
     ) -> None:
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, "mix_cells")
         self.cat_col = cat_col
         self.ts_col = ts_col
         self.bucket_unit = bucket_unit
-        self.store_dir = os.path.join(root, "mix_cells")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
-        cells = (
+    def _partial(self, batch: DataFrame) -> DataFrame:
+        return (
             batch.where(
                 F.col(self.cat_col).isNotNull()
                 & F.col(self.ts_col).isNotNull()
@@ -695,79 +565,34 @@ class IncrementalCategoryMix:
             .groupBy("per", "cat")
             .agg(F.count(F.lit(1)).cast("double").alias("n_pc"))
         )
-        store = self._store()
-        if store is not None:
-            cells = (
-                store.unionByName(cells)
-                .groupBy("per", "cat")
-                .agg(F.sum("n_pc").alias("n_pc"))
-            )
-        cells = cells.localCheckpoint(eager=True)
-        cells.write.mode("overwrite").parquet(self.store_dir)
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy("per", "cat").agg(F.sum("n_pc").alias("n_pc"))
 
     def jsd(self, period_name: str = "period") -> DataFrame:
         """(period_name, n, n_categories, jsd) over everything seen —
         identical to the batch operator on the full event set."""
         from ai_etl_framework_spark.operators.drift import jsd_from_cells
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
-        return jsd_from_cells(store, period_name)
-
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"category-mix stream did not finish in {timeout_sec}s"
-            )
-
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)
+        return jsd_from_cells(self._store(), period_name)
 
 
-class IncrementalHeavyHitters:
+class IncrementalHeavyHitters(IncrementalStore):
     """Streaming heavy-hitters / key-skew service — the incremental
     twin of operators/audit.skew_report: each micro-batch collapses
     to its per-key counts and MERGES them additively into a persisted
-    key store (sum is commutative + associative, the st04 argument),
-    so ``report()`` — which runs
+    key store, so ``report()`` — which runs
     :func:`~ai_etl_framework_spark.operators.audit.skew_report_from_counts`,
-    the SAME rider/top-k core the batch advisor uses — is independent
-    of micro-batch boundaries and equals the batch operator over
-    every event seen. The st11 registry row therefore carries a REAL
-    hash oracle (x131's SQL shape over the same input). Like
-    st04/st05/st07/st09 (and unlike st06's idempotent distinct
-    store), additive counts do NOT absorb at-least-once replays —
-    pair with upstream exactly-once file semantics or an id-dedup
-    stage.
+    the SAME rider/top-k core the batch advisor uses — equals the
+    batch operator over every event seen. The st11 registry row
+    therefore carries a REAL hash oracle (x131's SQL shape over the
+    same input).
 
-    Scale shape per batch: one batch-sized key hash aggregation + one
-    store-sized merge aggregation. The store is the |distinct keys|
-    frame — exactly the thing being measured (skew_report's
-    contract); for key spaces too large to persist exactly, a
-    Misra-Gries bounded-memory variant would trade the exact oracle
-    for an ε-approximate one — out of scope here, documented so the
-    100 TB deployment decision is explicit."""
+    The store is the |distinct keys| frame — exactly the thing being
+    measured (skew_report's contract); for key spaces too large to
+    persist exactly, a Misra-Gries bounded-memory variant would trade
+    the exact oracle for an ε-approximate one — out of scope here,
+    documented so the 100 TB deployment decision is explicit."""
 
     def __init__(
         self,
@@ -775,31 +600,18 @@ class IncrementalHeavyHitters:
         root: str,
         key_col: str = "user_id",
     ) -> None:
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, "hh_counts")
         self.key_col = key_col
-        self.store_dir = os.path.join(root, "hh_counts")
 
-    def _store(self) -> Optional[DataFrame]:
-        if not os.path.isdir(self.store_dir):
-            return None
-        return self.spark.read.parquet(self.store_dir)
-
-    def process_batch(self, batch: DataFrame, batch_id: int = 0) -> None:
+    def _partial(self, batch: DataFrame) -> DataFrame:
         # NULL keys are KEPT (as their own group): skew_report pins
         # NULL as a key value — usually the heaviest skew culprit
-        counts = batch.groupBy(F.col(self.key_col).alias("k")).agg(
+        return batch.groupBy(F.col(self.key_col).alias("k")).agg(
             F.count(F.lit(1)).cast("long").alias("n")
         )
-        store = self._store()
-        if store is not None:
-            counts = (
-                store.unionByName(counts)
-                .groupBy("k")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
-        counts = counts.localCheckpoint(eager=True)
-        counts.write.mode("overwrite").parquet(self.store_dir)
+
+    def _merge(self, both: DataFrame) -> DataFrame:
+        return both.groupBy("k").agg(F.sum("n").cast("long").alias("n"))
 
     def report(self, top_k: int = 20) -> DataFrame:
         """skew_report over everything seen — (rank, key, n, share,
@@ -809,40 +621,8 @@ class IncrementalHeavyHitters:
             skew_report_from_counts,
         )
 
-        store = self._store()
-        if store is None:
-            raise ValueError("no events processed yet: store is empty")
         return skew_report_from_counts(
-            store.withColumnRenamed("k", self.key_col),
+            self._store().withColumnRenamed("k", self.key_col),
             [self.key_col],
             top_k,
         )
-
-    def run_stream(
-        self,
-        bronze_dir: str,
-        checkpoint_dir: str,
-        schema,
-        max_files_per_trigger: int = 1,
-        timeout_sec: int = 300,
-    ) -> None:
-        stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(bronze_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_sec):
-            q.stop()
-            raise TimeoutError(
-                f"heavy-hitters stream did not finish in {timeout_sec}s"
-            )
-
-    def run_batches(self, batches) -> None:
-        for i, b in enumerate(batches):
-            self.process_batch(b, i)

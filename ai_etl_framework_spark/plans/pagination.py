@@ -27,7 +27,8 @@ from typing import Any, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ai_etl_framework_spark.plans.filters import Filter, apply_filters
+from ai_etl_framework_spark.plans.filters import Filter, _escape_like, apply_filters
+from ai_etl_framework_spark.sqlnames import ident
 
 
 def _observe_total(frame: DataFrame) -> tuple[DataFrame, str]:
@@ -138,14 +139,15 @@ def drill_down(
             return True
 
         def _sort_expr(f):
+            c = F.col(ident(f.name))  # a schema field: `v.x` is one column
             if _orderable(f.dataType):
-                return F.col(f.name).asc_nulls_first()
+                return c.asc_nulls_first()
             if isinstance(f.dataType, (T.MapType, T.ArrayType, T.StructType)):
                 # a deterministic orderable surrogate — maps etc. still
                 # contribute to the total order instead of silently
                 # reinstating nondeterministic offset pagination
-                return F.to_json(F.col(f.name)).asc_nulls_first()
-            return F.col(f.name).cast("string").asc_nulls_first()
+                return F.to_json(c).asc_nulls_first()
+            return c.cast("string").asc_nulls_first()
 
         out = out.orderBy(*[_sort_expr(f) for f in out.schema.fields])
     page = out.offset(offset).limit(limit) if offset else out.limit(limit)
@@ -177,8 +179,7 @@ def distinct_values(
     c = F.col(column)
     base = df.select(c.alias(column)).where(c.isNotNull())
     if search:
-        esc = search.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-        base = base.where(c.cast("string").ilike(f"%{esc}%"))
+        base = base.where(c.cast("string").ilike(f"%{_escape_like(search)}%"))
     distinct = base.distinct()
     observed, metric = _observe_total(distinct)
     page = observed.orderBy(c.asc()).limit(limit)

@@ -32,9 +32,7 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-class StorageError(RuntimeError):
-    """Mirror of common/exceptions.py StorageError."""
+from ai_etl_framework_spark.errors import StorageError
 
 
 class IntermediateStorage:

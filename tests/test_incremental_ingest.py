@@ -11,11 +11,6 @@ import time
 
 import pytest
 
-# r14 driver-tier split (VERDICT r13 item 1): this suite is
-# hypothesis/differential/e2e-heavy and runs in the SLOW tier
-# (`pytest -m slow`); the driver's default `pytest tests/` keeps
-# the contract/pin/parity suites inside its verify window.
-pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from ai_etl_framework_spark.pipeline.ingest import IncrementalCorpusIngest
@@ -233,3 +228,15 @@ def test_st03_registry_entry(spark):
     # deterministic: same result on a second run
     again = entrymod.st03_incremental_ingest(spark, "/root/testdata/sf0.001")
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, rows))
+
+
+def test_file_uri_root_matches_plain_path(spark, tmp_path):
+    """The fingerprint and band stores are found through the Hadoop
+    FileSystem API, so under a ``file://`` root batch 2 still dedups
+    against batch 1 and the history, as under a plain path."""
+    plain = IncrementalCorpusIngest(spark, str(tmp_path / "plain"))
+    uri = IncrementalCorpusIngest(spark, (tmp_path / "uri").as_uri())
+    for ing in (plain, uri):
+        ing.seed_history(_mk(spark, HIST))
+        ing.run_batches([_mk(spark, B1), _mk(spark, B2)])
+    assert _accepted_ids(uri) == _accepted_ids(plain) == [3, 4, 12, 100, 101]

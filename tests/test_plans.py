@@ -144,6 +144,12 @@ def drill_cases(spark, orders):
         ),
         # Catalyst prunes the page (and its observation) to nothing
         "range-offset-past-end": (spark.range(100), dict(offset=200, limit=5)),
+        # the default order sorts on every field: a top-level `v.x` is
+        # one column, not field x of a struct v
+        "dotted-name": (
+            orders.select(F.col("o_orderkey").alias("v.x"), "o_orderstatus"),
+            dict(filters=open_, columns=["`v.x`"], limit=5, offset=2),
+        ),
     }
 
 
@@ -151,6 +157,7 @@ def drill_cases(spark, orders):
     "offset-past-end", "limit-0", "keyset-after", "keyset-after-desc",
     "filters-match-nothing", "no-order-by-map-column", "projection",
     "presorted-range", "presorted-frame", "range-offset-past-end",
+    "dotted-name",
 ])
 def test_drill_down_total_matches_count(drill_cases, case):
     """The total observed inside the page's action equals a separate

@@ -1,6 +1,7 @@
 """Pin the r13 SQL-text build of the quality expressions against the
-Column-API reference implementation (`_quality_expressions_column_api`
-— the pre-r13 construction, kept verbatim as the executable spec).
+Column-API reference implementation (`quality_expressions_column_api`
+in tests/column_reference.py — the pre-r13 construction, kept verbatim
+as the executable spec).
 
 The text generator must reproduce every check's value bit for bit —
 including the DECIMAL-vs-DOUBLE literal trap (a bare ``0.0`` in Spark
@@ -17,9 +18,9 @@ from pyspark.sql import functions as F
 
 from ai_etl_framework_spark.operators.quality import (
     QualityScorer,
-    _quality_expressions_column_api,
     quality_expressions,
 )
+from tests.column_reference import quality_expressions_column_api
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +43,7 @@ def frame(spark):
 
 def test_quality_sql_text_matches_column_api(frame):
     got = quality_expressions(frame)
-    ref = _quality_expressions_column_api(frame)
+    ref = quality_expressions_column_api(frame)
     out = frame.select(
         *[got[k].alias(f"g_{k}") for k in got],
         *[ref[k].alias(f"r_{k}") for k in ref],
@@ -72,7 +73,7 @@ def test_quality_scorer_end_to_end_unchanged(frame):
     ref = frame.select(
         "*",
         *[
-            _quality_expressions_column_api(frame)[k.removeprefix("_meta_")]
+            quality_expressions_column_api(frame)[k.removeprefix("_meta_")]
             .alias(k)
             for k in cols
         ],

@@ -10,12 +10,6 @@ import random
 
 import pytest
 
-# r14 driver-tier split (VERDICT r13 item 1): this suite is
-# hypothesis/differential/e2e-heavy and runs in the SLOW tier
-# (`pytest -m slow`); the driver's default `pytest tests/` keeps
-# the contract/pin/parity suites inside its verify window.
-pytestmark = pytest.mark.slow
-
 from ai_etl_framework_spark.operators.scaling import binned_quantiles
 from ai_etl_framework_spark.pipeline.monitor import IncrementalQuantiles
 

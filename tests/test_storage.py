@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ai_etl_framework_spark.errors import ETLError
 from ai_etl_framework_spark.storage import IntermediateStorage, StorageError
 
 
@@ -44,8 +45,10 @@ def test_exists_delete_cleanup(spark, store):
     assert not store.exists("p2/extracted")
     store.cleanup("p2")
     assert not store.exists("p2/transformed")
-    with pytest.raises(StorageError, match="No stored records"):
+    with pytest.raises(StorageError, match="No stored records") as err:
         store.load("p2/transformed")
+    # the engine's one StorageError: `except ETLError` catches it
+    assert isinstance(err.value, ETLError)
 
 
 def test_list_keys_prefix_and_sidecar_exclusion(spark, store):
