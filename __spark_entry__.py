@@ -2610,14 +2610,9 @@ def _backfill_state_partitions(spark: SparkSession, bronze_dir: str) -> int:
     should amortize far more — set it to MBs there)."""
     import math
 
-    total = 0
-    for root, _dirs, files in os.walk(bronze_dir):
-        for f in files:
-            if not f.startswith((".", "_")):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+    from ai_etl_framework_spark.sinks.compaction import dataset_stats
+
+    total = dataset_stats(spark, bronze_dir)["total_bytes"]
     try:
         target = int(os.environ.get(
             "SPARK_GRAFT_STATE_PART_BYTES", str(128 * 1024)
@@ -2765,7 +2760,7 @@ def _nan_to_null(df: DataFrame) -> DataFrame:
     """NULL-preserving pandas round trip: toPandas() represents NULL
     doubles as NaN, and whether createDataFrame maps NaN back to null
     depends on the session's Arrow configuration (the house session
-    does, a PLAIN ANSI session does not — caught by st03's oracle
+    does, a PLAIN ANSI session does not — caught by an oracle
     under SPARK_GRAFT_PLAIN_SESSION). No streaming output here ever
     produces a legitimate NaN (finite sums / rates), so nan→null is
     exact."""
@@ -2780,6 +2775,50 @@ def _nan_to_null(df: DataFrame) -> DataFrame:
         for f in df.schema.fields
     ]
     return df.select(*cols)
+
+
+# the st04–st11 stores are mergeable, so any split works; st03's oracle
+# replays its own split (history, then crawl 1, then crawl 2)
+_EVENT_HALVES = ("event_id % 2 = 0", "event_id % 2 = 1")
+
+
+def _run_store_stream(spark: SparkSession, src: DataFrame,
+                      parts: tuple[str, ...], service: Callable,
+                      readout: Callable) -> DataFrame:
+    """Shared scaffold of the keyed-store rows (st03–st11): drive one
+    foreachBatch store service over ``src`` as a file stream and return
+    its readout.
+
+    Each SQL predicate in ``parts`` selects one micro-batch. Its rows
+    are written as ONE coalesced parquet file and moved into
+    ``bronze/`` with increasing mtimes, so ``max_files_per_trigger=1``
+    replays the parts in their given order — st03's oracle encodes that
+    exact order. ``service(root)`` builds the service on the scratch
+    root; ``readout(service)`` is collected before the scratch dir is
+    removed, which it always is."""
+    import shutil
+    import tempfile
+    import time
+
+    root = tempfile.mkdtemp(prefix="store_stream_")
+    try:
+        bronze = os.path.join(root, "bronze")
+        os.makedirs(bronze)
+        now = time.time()
+        for i, pred in enumerate(parts, 1):
+            stage = os.path.join(root, f"stage{i}")
+            src.where(pred).coalesce(1).write.parquet(stage)
+            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+            dst = os.path.join(bronze, f"part_{i}.parquet")
+            shutil.move(os.path.join(stage, part), dst)
+            os.utime(dst, (now + i, now + i))
+        svc = service(root)
+        svc.run_stream(bronze, os.path.join(root, "ckpt"),
+                       schema=src.schema, max_files_per_trigger=1)
+        out = readout(svc)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def st01_stream_sessions(spark: SparkSession, sf_dir: str, *,
@@ -2969,7 +3008,7 @@ def st03_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE-BACKED since r13 (VERDICT r12 item 6): WHICH document
     survives a cross-batch dup pair depends on micro-batch order —
     but this harness PINS the order (history %3==0 seeds the stores;
-    crawl_1 then crawl_2 as mtime-ordered single-file micro-batches),
+    crawl 1 then crawl 2 as mtime-ordered single-file micro-batches),
     and every survivor rule is deterministic (earlier batch wins;
     min doc_id wins within a batch, exact and near) — so the accepted
     set is a pure function of the documents table and the _st03_sql
@@ -2987,32 +3026,16 @@ def st03_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: tagged union — one ("accepted", doc_id, 1, NULL) row per
     silver document plus one ("report", source, n_docs, dup_rate) row
     per source from the refreshed dataset card."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.ingest import IncrementalCorpusIngest
 
     docs = load_table(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="st03_")
-    try:
+
+    def service(root: str) -> IncrementalCorpusIngest:
         ing = IncrementalCorpusIngest(spark, root)
-        ing.seed_history(docs.where(F.col("doc_id") % 3 == 0))
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (1, 2):
-            stage = os.path.join(root, f"stage{i}")
-            docs.where(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"crawl_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        ing.run_stream(bronze, os.path.join(root, "ckpt"),
-                       schema=docs.schema, max_files_per_trigger=1)
+        ing.seed_history(docs.where("doc_id % 3 = 0"))
+        return ing
+
+    def readout(ing: IncrementalCorpusIngest) -> DataFrame:
         accepted = ing.silver().select(
             F.lit("accepted").alias("kind"),
             F.col("doc_id").cast("string").alias("key"),
@@ -3025,13 +3048,11 @@ def st03_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_docs").alias("n"),
             F.col("dup_rate").alias("val"),
         )
-        out = accepted.unionByName(report)
-        # materialize before the scratch dir disappears (same pattern
-        # as _run_stream_once)
-        schema, pdf = out.schema, out.toPandas()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return _nan_to_null(spark.createDataFrame(pdf, schema))
+        return accepted.unionByName(report)
+
+    return _run_store_stream(
+        spark, docs, ("doc_id % 3 = 1", "doc_id % 3 = 2"), service, readout
+    )
 
 
 def x01_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7018,43 +7039,17 @@ def st04_burst_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the REAL x61 hash oracle, not a rows-only check (the first
     streaming entry that can). Stream≡batch equality is additionally
     pinned in tests/test_burst_monitor.py."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalBurstMonitor,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st04_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalBurstMonitor(
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalBurstMonitor(
             spark, root, bucket_unit="hour", trailing=6, factor=2.0
-        )
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        # materialize before the tempdir vanishes
-        out = mon.alerts()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda mon: mon.alerts(),
+    )
 
 
 def st05_ohlc_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7066,38 +7061,13 @@ def st05_ohlc_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch-boundary independence ⇒ the row shares x49's hash
     oracle verbatim (the st04 argument). Stream≡batch equality pinned
     in tests/test_burst_monitor.py."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import IncrementalOhlcStore
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st05_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"ticks_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        store = IncrementalOhlcStore(spark, root, bucket_unit="hour")
-        store.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = store.candles()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalOhlcStore(spark, root, bucket_unit="hour"),
+        lambda store: store.candles(),
+    )
 
 
 def x71_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7842,40 +7812,15 @@ def st06_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent AND commutative, so the store is boundary- and
     replay-independent] → sweep-line curve. Carries x86's REAL hash
     oracle (the naive per-day COUNT DISTINCT definition)."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalActiveUsers,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st06_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalActiveUsers(spark, root, window_days=7)
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = mon.curve()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalActiveUsers(spark, root, window_days=7),
+        lambda mon: mon.curve(),
+    )
 
 
 def x87_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8264,41 +8209,16 @@ def st07_quantile_service(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted (key, bin, n) store] → quantiles_from_bins — the same
     code path the batch operator runs, so the row carries x95's REAL
     hash oracle (additive counts ⇒ micro-batch-boundary-independent)."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import IncrementalQuantiles
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st07_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        svc = IncrementalQuantiles(
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalQuantiles(
             spark, root, value_col="value", key_col="event_type",
             width=5.0, qs=(0.5, 0.95, 0.99),
-        )
-        svc.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = svc.quantiles()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda svc: svc.quantiles(),
+    )
 
 
 def x96_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8423,43 +8343,18 @@ def st08_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean re-derives as sum/n exactly] → cusum_from_series, the same
     code path as the batch operator, so the row carries x96's REAL
     hash oracle."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalCusumMonitor,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st08_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalCusumMonitor(
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalCusumMonitor(
             spark, root, value_col="value", key_col="event_type",
             ts_col="ts", bucket_unit="day", slack=0.5, threshold=4.0,
-        )
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = mon.screen()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+        lambda mon: mon.screen(),
+    )
 
 
 def x99_qq_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9330,40 +9225,15 @@ def st09_mix_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     associative, so the store is micro-batch-boundary-independent] →
     jsd_from_cells. Carries x121's REAL hash oracle (the batch JSD
     definition)."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalCategoryMix,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st09_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalCategoryMix(spark, root)
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = mon.jsd(period_name="day")
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalCategoryMix(spark, root),
+        lambda mon: mon.jsd(period_name="day"),
+    )
 
 
 def st11_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -9375,40 +9245,15 @@ def st11_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew_report_from_counts, the SAME rider/top-k core as the x131
     batch advisor. Carries a REAL hash oracle (x131's SQL shape over
     events.user_id)."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalHeavyHitters,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st11_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalHeavyHitters(spark, root, key_col="user_id")
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = mon.report(top_k=20)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalHeavyHitters(spark, root, key_col="user_id"),
+        lambda mon: mon.report(top_k=20),
+    )
 
 
 _ST11_SQL = """
@@ -9774,40 +9619,15 @@ def st10_new_returning_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent (user, day) store st06 maintains, second readout —
     boundary- and replay-independent, so the row carries x127's REAL
     hash oracle."""
-    import shutil
-    import tempfile
-    import time as _time
-
     from ai_etl_framework_spark.pipeline.monitor import (
         IncrementalActiveUsers,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="st10_")
-    try:
-        bronze = os.path.join(root, "bronze")
-        os.makedirs(bronze)
-        for i in (0, 1):
-            stage = os.path.join(root, f"stage{i}")
-            ev.where(F.col("event_id") % 2 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            src = next(
-                f for f in os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = os.path.join(bronze, f"feed_{i}.parquet")
-            shutil.move(os.path.join(stage, src), dst)
-            os.utime(dst, (_time.time() + i, _time.time() + i))
-        mon = IncrementalActiveUsers(spark, root, window_days=7)
-        mon.run_stream(
-            bronze, os.path.join(root, "ckpt"), schema=ev.schema,
-            max_files_per_trigger=1,
-        )
-        out = mon.new_returning()
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return _run_store_stream(
+        spark, load_table(spark, sf_dir, "events"), _EVENT_HALVES,
+        lambda root: IncrementalActiveUsers(spark, root, window_days=7),
+        lambda mon: mon.new_returning(),
+    )
 
 
 def x129_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,7 +8,7 @@ store contract:
 
 - **Any Hadoop filesystem.** The store lives at ``root/<name>`` and is
   found, read and replaced through the Hadoop FileSystem API
-  (``streaming/cdc.py``'s helpers, as in ``sinks/compaction.py``), so a
+  (``storage.py``'s helpers, as in ``sinks/compaction.py``), so a
   ``file://``, ``hdfs://`` or ``s3a://`` root behaves like a plain path.
 - **Write next, then swap.** A batch never overwrites the store it
   reads. The merged store is written to the sibling ``<name>.next`` and
@@ -45,7 +45,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ai_etl_framework_spark.streaming.cdc import (
+from ai_etl_framework_spark.storage import (
     _exists,
     _recover_interrupted_swap,
     _swap,

@@ -39,6 +39,7 @@ from ai_etl_framework_spark.plans.aggspec import run_query
 from ai_etl_framework_spark.plans.pagination import distinct_values, drill_down
 from ai_etl_framework_spark.plans.profile import profile_schema
 from ai_etl_framework_spark.sources.paths import slugify
+from ai_etl_framework_spark.storage import _exists
 
 
 class DashboardService:
@@ -65,14 +66,16 @@ class DashboardService:
 
     def get_df(self, org: str, source: str) -> DataFrame:
         """Parquet preferred over CSV (ref duckdb_service.py:97-99);
-        cached until :meth:`invalidate`."""
+        cached until :meth:`invalidate`. Looked up through the Hadoop
+        FileSystem API, so a ``file://``, ``hdfs://`` or ``s3a://``
+        ``base_dir`` works like a plain path."""
         key = (slugify(org), slugify(source))
         if key in self._cache:
             return self._cache[key]
         pq, csv = self._gold_paths(org, source)
-        if os.path.exists(pq):
+        if _exists(self.spark, pq):
             df = self.spark.read.parquet(pq)
-        elif os.path.exists(csv):
+        elif _exists(self.spark, csv):
             df = self.spark.read.csv(csv, header=True, inferSchema=True)
         else:
             raise ReadError(f"no gold data for {org}/{source}: {pq}")

@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ai_etl_framework_spark.streaming.cdc import (
+from ai_etl_framework_spark.storage import (
     _exists,
     _fs,
     _recover_interrupted_swap,

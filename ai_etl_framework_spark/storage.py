@@ -23,6 +23,12 @@ Presigned upload/download URLs (s3_storage.py:217-259) are
 boto3-specific; ``presigned_url`` is import-gated with an install
 hint. Presigning is pure local signature math, so it is tested with
 throwaway credentials — no bucket required.
+
+The module-level helpers (``_fs``, ``_exists``, ``_swap``,
+``_recover_interrupted_swap``) are the same layer for whole datasets:
+the existence check and the two-rename directory swap shared by the
+CDC snapshot, compaction, the keyed-store services and the
+dashboard's gold lookup.
 """
 
 from __future__ import annotations
@@ -33,6 +39,66 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from ai_etl_framework_spark.errors import StorageError
+
+
+def _fs(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    fs, hpath, _ = _fs(spark, path)
+    return fs.exists(hpath)
+
+
+def _recover_interrupted_swap(spark: SparkSession, cur_path: str) -> None:
+    """Roll back a swap that died between its two renames: ``cur`` is
+    missing but ``cur.old`` (the complete previous snapshot) survives.
+    Without this, a reader would silently treat the dataset as EMPTY —
+    and the next successful swap would then delete ``.old``, the only
+    remaining copy. Call before reading or swapping ``cur_path``."""
+    fs, cur, jvm = _fs(spark, cur_path)
+    old = jvm.org.apache.hadoop.fs.Path(cur_path + ".old")
+    if not fs.exists(cur) and fs.exists(old):
+        if not fs.rename(old, cur):
+            raise IOError(
+                f"recovering interrupted swap: rename({cur_path}.old, "
+                f"{cur_path}) failed"
+            )
+
+
+def _swap(spark: SparkSession, new_path: str, cur_path: str) -> None:
+    """Replace ``cur`` with ``new`` via two renames, failing LOUDLY.
+
+    Hadoop FileSystem.rename reports failure by returning False (it
+    does not raise on most implementations, S3A included) — every
+    rename here is checked, because an ignored ``rename(cur, old)``
+    failure would make the following ``rename(new, cur)`` nest the
+    new directory INSIDE the still-existing ``cur``, silently
+    corrupting the dataset. The unavoidable non-atomic window between
+    the two renames is covered by :func:`_recover_interrupted_swap`
+    (the previous snapshot survives as ``cur.old`` until the new one
+    is in place)."""
+    _recover_interrupted_swap(spark, cur_path)
+    fs, cur, jvm = _fs(spark, cur_path)
+    _, new, _ = _fs(spark, new_path)
+    old = jvm.org.apache.hadoop.fs.Path(cur_path + ".old")
+    if fs.exists(old) and not fs.delete(old, True):
+        raise IOError(f"could not delete stale backup {cur_path}.old")
+    had_cur = fs.exists(cur)
+    if had_cur and not fs.rename(cur, old):
+        raise IOError(f"rename({cur_path}, {cur_path}.old) failed")
+    if not fs.rename(new, cur):
+        # roll back so readers keep seeing the previous snapshot
+        if had_cur:
+            fs.rename(old, cur)
+        raise IOError(f"rename({new_path}, {cur_path}) failed")
+    # best-effort backup cleanup: a leftover .old is harmless (next
+    # swap deletes it) — a raise here would fail an already-successful
+    # swap, so the return value is deliberately not checked
+    if fs.exists(old):
+        fs.delete(old, True)
 
 
 class IntermediateStorage:

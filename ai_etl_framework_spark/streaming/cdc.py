@@ -23,7 +23,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+
+# bound here, not only used: apply_cdc_stream looks _swap up in this
+# module at call time, so a caller can rebind cdc._swap
+from ai_etl_framework_spark.storage import (
+    _exists,
+    _recover_interrupted_swap,
+    _swap,
+)
 
 
 def latest_per_key(batch: DataFrame, keys: list[str], seq_col: str) -> DataFrame:
@@ -109,64 +117,3 @@ def apply_cdc_stream(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-# -- Hadoop FS helpers (work on any supported filesystem, not just local) --
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    fs, hpath, _ = _fs(spark, path)
-    return fs.exists(hpath)
-
-
-def _recover_interrupted_swap(spark: SparkSession, cur_path: str) -> None:
-    """Roll back a swap that died between its two renames: ``cur`` is
-    missing but ``cur.old`` (the complete previous snapshot) survives.
-    Without this, a reader would silently treat the dataset as EMPTY —
-    and the next successful swap would then delete ``.old``, the only
-    remaining copy. Call before reading or swapping ``cur_path``."""
-    fs, cur, jvm = _fs(spark, cur_path)
-    old = jvm.org.apache.hadoop.fs.Path(cur_path + ".old")
-    if not fs.exists(cur) and fs.exists(old):
-        if not fs.rename(old, cur):
-            raise IOError(
-                f"recovering interrupted swap: rename({cur_path}.old, "
-                f"{cur_path}) failed"
-            )
-
-
-def _swap(spark: SparkSession, new_path: str, cur_path: str) -> None:
-    """Replace ``cur`` with ``new`` via two renames, failing LOUDLY.
-
-    Hadoop FileSystem.rename reports failure by returning False (it
-    does not raise on most implementations, S3A included) — every
-    rename here is checked, because an ignored ``rename(cur, old)``
-    failure would make the following ``rename(new, cur)`` nest the
-    new directory INSIDE the still-existing ``cur``, silently
-    corrupting the dataset. The unavoidable non-atomic window between
-    the two renames is covered by :func:`_recover_interrupted_swap`
-    (the previous snapshot survives as ``cur.old`` until the new one
-    is in place)."""
-    _recover_interrupted_swap(spark, cur_path)
-    fs, cur, jvm = _fs(spark, cur_path)
-    _, new, _ = _fs(spark, new_path)
-    old = jvm.org.apache.hadoop.fs.Path(cur_path + ".old")
-    if fs.exists(old) and not fs.delete(old, True):
-        raise IOError(f"could not delete stale backup {cur_path}.old")
-    had_cur = fs.exists(cur)
-    if had_cur and not fs.rename(cur, old):
-        raise IOError(f"rename({cur_path}, {cur_path}.old) failed")
-    if not fs.rename(new, cur):
-        # roll back so readers keep seeing the previous snapshot
-        if had_cur:
-            fs.rename(old, cur)
-        raise IOError(f"rename({new_path}, {cur_path}) failed")
-    # best-effort backup cleanup: a leftover .old is harmless (next
-    # swap deletes it) — a raise here would fail an already-successful
-    # swap, so the return value is deliberately not checked
-    if fs.exists(old):
-        fs.delete(old, True)

@@ -365,8 +365,9 @@ def main() -> None:
     # One untimed warm pass + median-of-5 (r8 verdict item 3): the
     # r7->r8 p01 "regression" (274k -> 244k rec/s) bisected to pure
     # JVM warm-order noise, not the spill-compression change —
-    # scripts/bisect_p01.py runs both spill settings in both orders
-    # and whichever arm runs SECOND wins (~0.63s vs ~0.88s median),
+    # a bisect script (since removed; this comment is its record) ran
+    # both spill settings in both orders, and whichever arm ran SECOND
+    # won (~0.63s vs ~0.88s median),
     # steady state is ~0.60s under either config. p01's write path
     # has its own codegen/committer warm-up that three timed runs
     # don't fully absorb (r8 raw [1.09, 0.61, 0.51]); the untimed

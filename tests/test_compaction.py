@@ -79,7 +79,7 @@ def test_swap_recovers_from_interrupted_rename(spark, tmp_path):
     would even delete `.old` (the only copy) on the next success."""
     import os
 
-    from ai_etl_framework_spark.streaming.cdc import (
+    from ai_etl_framework_spark.storage import (
         _recover_interrupted_swap,
         _swap,
     )

@@ -14,12 +14,6 @@ import os
 import duckdb
 import pytest
 
-# r14 driver-tier split (VERDICT r13 item 1): this suite is
-# hypothesis/differential/e2e-heavy and runs in the SLOW tier
-# (`pytest -m slow`); the driver's default `pytest tests/` keeps
-# the contract/pin/parity suites inside its verify window.
-pytestmark = pytest.mark.slow
-
 import __spark_entry__ as entry
 from scripts.drive_oracle import canon
 

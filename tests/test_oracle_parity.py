@@ -85,3 +85,32 @@ def test_rows_only_queries(spark, sf_dir):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+# The gate is the first 50 ``queries()`` entries, in order.
+GATE = [
+    "q01_pricing_summary", "q02_filter_spec", "q03_join_revenue_suite",
+    "q04_topk_suite", "q05_distinct_values", "q06_drilldown_page",
+    "q07_agg_semantics", "q08_null_suite", "q09_quality_score",
+    "q10_anomaly_methods", "q12_dedup_modes", "q15_profile_stats",
+    "q17_window_events", "q20_column_remover", "q21_rollup_dims",
+    "q23_schema_infer", "q24_dedup_cc", "q27_agg_custom_udaf",
+    "q28_sessionize", "q29_chart_prep", "q32_agg_list",
+    "q34_asof_range_suite", "x82_interpolate", "x139_grouped_auc",
+    "q38_window_json_suite", "q40_exists_antijoin", "q43_merge_scd2_suite",
+    "dd01_fingerprint_dups", "dd02_signatures", "dd03_minhash_band_pairs",
+    "dd04_ngram_jaccard", "sim01_cosine_topk", "sim02_embedding_dup_pairs",
+    "txt01_text_profile", "txt05_pii_redact", "txt07_gopher_quality",
+    "dc01_decontaminate", "sk01_sketch_sample_suite", "x110_rollup",
+    "x03_media_meta", "st01_stream_suite", "x01_ann_recall", "x04_iforest",
+    "x100_pca", "x107_log_odds", "x133_grouped_ols2", "x48_funnel_timings",
+    "x140_cluster_canonical", "st11_heavy_hitters",
+    "st03_incremental_ingest",
+]
+
+
+def test_registry_gate_order():
+    """The gate's names and order are pinned, and every oracle keys a
+    registry entry."""
+    assert list(QUERIES)[:50] == GATE
+    assert set(ORACLE) <= set(QUERIES)

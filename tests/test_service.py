@@ -48,6 +48,22 @@ def test_query_schema_drill_values(spark, gold):
     assert vals["values"] == ["a", "b"]
 
 
+def test_file_uri_base_matches_plain_path(spark, gold):
+    """A ``file://`` base_dir finds the same gold data through the
+    Hadoop FileSystem API and answers like the plain-path service."""
+    plain = DashboardService(spark, gold, cache_data=False)
+    uri = DashboardService(spark, "file://" + gold, cache_data=False)
+    spec = {"group_by": ["grp"], "metrics": [{"column": "amount", "agg": "sum"}]}
+    answers = []
+    for svc in (plain, uri):
+        res = svc.query("Acme Corp", "My Claims", spec=spec)
+        page = svc.drill_down("Acme Corp", "My Claims", limit=3, order_by="id")
+        answers.append((res["records"], res["row_count"],
+                        page["records"], page["total_count"]))
+    assert answers[1] == answers[0]
+    assert answers[0][3] == 4
+
+
 def test_cache_and_invalidate(spark, gold):
     svc = DashboardService(spark, gold)
     df1 = svc.get_df("Acme Corp", "My Claims")
