@@ -25,7 +25,6 @@ Divergences (documented, Spark-inherent):
 from __future__ import annotations
 
 import os
-import shutil
 import time
 import uuid
 from datetime import datetime, timezone
@@ -35,7 +34,8 @@ from pyspark.sql import SparkSession
 
 from ai_etl_framework_spark.pipeline.config import build_pipeline
 from ai_etl_framework_spark.pipeline.pipeline import Pipeline
-from ai_etl_framework_spark.sources.paths import generate_outputs
+from ai_etl_framework_spark.sources.paths import generate_outputs, slugify
+from ai_etl_framework_spark.storage import _exists, _fs, _list_dir, _write_bytes
 
 
 def _now() -> str:
@@ -97,9 +97,8 @@ class PipelineApiService:
                 break
 
         org = str(cfg.get("org_id") or "default")
+        # no directories made here: Spark's writers create their parents
         outputs = generate_outputs(self.base_dir, org, cfg["name"], etl_type)
-        for key in ("bi_path", "rag_path", "quarantine_path"):
-            os.makedirs(os.path.dirname(outputs[key]), exist_ok=True)
 
         cfg["destinations"] = [
             {"type": etl_type, "path": outputs["bi_path"]},
@@ -290,8 +289,8 @@ class PipelineApiService:
         """Drop state + staged checkpoints (ref :504-512 cleanup)."""
         self.staged_pipelines.pop(pipeline_id, None)
         self.pipelines.pop(pipeline_id, None)
-        shutil.rmtree(os.path.join(self.checkpoint_dir, pipeline_id),
-                      ignore_errors=True)
+        fs, ckpt, _ = _fs(self.spark, os.path.join(self.checkpoint_dir, pipeline_id))
+        fs.delete(ckpt, True)
         return {"message": "Pipeline deleted successfully",
                 "pipeline_id": pipeline_id}
 
@@ -306,22 +305,17 @@ class PipelineApiService:
         already-read bytes. The filename is basename-stripped so a
         crafted '../' can't escape the bronze dir, and the response
         carries the reference's exact {name, path, size} shape."""
-        from ai_etl_framework_spark.sources.paths import slugify
-
         name = os.path.basename(filename or "")
         # '.'/'..' pass basename but name directories — without this
-        # check open(..., 'wb') dies with IsADirectoryError instead of
-        # the contract's fail-loud ValueError (r12 review finding)
+        # check the write dies deep in the filesystem instead of with
+        # the contract's fail-loud ValueError
         if not name or name in (".", ".."):
             raise ValueError(
                 f"upload_bronze: invalid filename {filename!r} — must "
                 "name a plain file"
             )
-        bronze = os.path.join(self.base_dir, slugify(org), "bronze")
-        os.makedirs(bronze, exist_ok=True)
-        path = os.path.join(bronze, name)
-        with open(path, "wb") as fh:
-            fh.write(content)
+        path = os.path.join(self.base_dir, slugify(org), "bronze", name)
+        _write_bytes(self.spark, path, content)
         return {
             "success": True,
             "file": {"name": name, "path": path, "size": len(content)},
@@ -330,23 +324,19 @@ class PipelineApiService:
     def list_bronze(self, org: str) -> dict[str, Any]:
         """List the org's bronze files (ref main.py:1609 GET
         /api/organizations/{org}/files): name, path, size, mtime."""
-        from ai_etl_framework_spark.sources.paths import slugify
-
         bronze = os.path.join(self.base_dir, slugify(org), "bronze")
-        files = []
-        if os.path.isdir(bronze):
-            for name in sorted(os.listdir(bronze)):
-                path = os.path.join(bronze, name)
-                if os.path.isfile(path):
-                    st = os.stat(path)
-                    files.append({
-                        "name": name,
-                        "path": path,
-                        "size": st.st_size,
-                        "modified": datetime.fromtimestamp(
-                            st.st_mtime, tz=timezone.utc
-                        ).isoformat(),
-                    })
+        files = [
+            {
+                "name": e.name,
+                "path": os.path.join(bronze, e.name),
+                "size": e.size,
+                "modified": datetime.fromtimestamp(
+                    e.mtime_ms / 1000, tz=timezone.utc
+                ).isoformat(),
+            }
+            for e in _list_dir(self.spark, bronze)
+            if not e.is_dir
+        ]
         return {"files": files, "count": len(files)}
 
     def preview_data(self, pipeline_id: str, stage: str = "transformed",
@@ -356,7 +346,7 @@ class PipelineApiService:
         if pipeline_id not in self.staged_pipelines:
             return None
         path = os.path.join(self.checkpoint_dir, pipeline_id, stage)
-        if not os.path.exists(path):
+        if not _exists(self.spark, path):
             return None
         df = self.spark.read.parquet(path)
         rows = df.limit(limit).collect()

@@ -73,7 +73,9 @@ class Pipeline:
         one logical plan Catalyst can optimize across)."""
         if self._source is None:
             raise ValueError("no source; call extract() first")
-        df = self._source
+        return self._transformed(self._source)
+
+    def _transformed(self, df: DataFrame) -> DataFrame:
         for t in self._transformers:  # user order preserved (ref :44-51)
             df = t(df)
         return df
@@ -126,14 +128,8 @@ class Pipeline:
         return self._source
 
     def run_transform_only(self) -> str:
-        spark = self._source.sparkSession if self._source is not None else None
-        df = (
-            spark.read.parquet(self._ckpt("extracted"))
-            if spark is not None
-            else self.dataframe_source()
-        )
-        for t in self._transformers:
-            df = t(df)
+        spark = self.dataframe_source().sparkSession
+        df = self._transformed(spark.read.parquet(self._ckpt("extracted")))
         path = self._ckpt("transformed")
         df.write.mode("overwrite").parquet(path)
         return path

@@ -16,10 +16,12 @@ for local testing:
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import SparkSession
 
 from ai_etl_framework_spark.sqlnames import ident
+from ai_etl_framework_spark.storage import _fs
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -137,6 +139,10 @@ _TABLE_PLAN_CACHE_MAX = 128
 
 
 def _table_cache_key(spark: SparkSession, path: str):
+    # Local-only by design, the one os.stat site outside storage.py: a
+    # path os.stat cannot read (a URI) only means no plan cache, and a
+    # Hadoop listing per load_table call would cost what the cache
+    # exists to save.
     try:
         st = os.stat(path)
         mtime, size = st.st_mtime_ns, st.st_size
@@ -291,12 +297,11 @@ def widen(df, min_partitions: int | None = None):
     files that reach this path): byte-slices without a row-group start
     produce zero rows, so a large file written as one giant row group
     is really ONE split — previously the blind spot where widen
-    skipped an input that scans single-task. Sizes come from os.stat
-    for file:// and the Hadoop FileSystem API for remote schemes
-    (bounded: fewer than ``target`` files by this point); if a stat
-    fails the plan is left alone — the files could be huge, and a
-    guessed repartition of a multi-TB input is a far worse mistake
-    than a missed widening of a tiny one."""
+    skipped an input that scans single-task. Sizes come from the
+    Hadoop FileSystem API (bounded: fewer than ``target`` files by
+    this point); if a stat fails the plan is left alone — the files
+    could be huge, and a guessed repartition of a multi-TB input is a
+    far worse mistake than a missed widening of a tiny one."""
     import math
 
     spark = df.sparkSession
@@ -353,10 +358,8 @@ def _parquet_row_groups(spark, url: str) -> int | None:
     None when the footer can't be read; callers then keep the byte
     estimate, which can only SKIP a widening, never force one."""
     try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(url)
-        hif = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+        fs, p, jvm = _fs(spark, unquote(url))
+        hif = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, fs.getConf())
         reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(hif)
         try:
             return int(reader.getRowGroups().size())
@@ -367,16 +370,9 @@ def _parquet_row_groups(spark, url: str) -> int | None:
 
 
 def _file_size(spark, url: str) -> int:
-    """Byte size of one input file: os.stat for local paths, Hadoop
-    FileSystem (works for hdfs://, s3a://, ...) otherwise."""
-    from urllib.parse import unquote, urlparse
-
-    u = urlparse(url)
-    if u.scheme in ("file", ""):
-        return os.path.getsize(unquote(u.path))
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(url)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Byte size of one input file. ``url`` is an ``inputFiles()``
+    URI, percent-encoded; a Hadoop ``Path`` would encode it again."""
+    fs, p, _ = _fs(spark, unquote(url))
     return fs.getFileStatus(p).getLen()
 
 

@@ -30,7 +30,6 @@ Design:
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 

@@ -44,6 +44,7 @@ import shutil
 import time
 import uuid
 from typing import Optional
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -52,6 +53,15 @@ __all__ = ["VersionedTable"]
 
 class VersionedTable:
     def __init__(self, spark: SparkSession, root: str) -> None:
+        # The one filesystem site outside storage.py, by design: the
+        # single-winner commit is a posix os.link claim, so the table
+        # lives on a local path and a URI root fails here, loudly.
+        if urlparse(root).scheme:
+            raise ValueError(
+                f"VersionedTable needs a local posix path, got {root!r}: each "
+                "commit claims its version with os.link (posix atomic "
+                "create-if-absent), which a URI filesystem does not provide"
+            )
         self.spark = spark
         self.root = root
         self.data_dir = os.path.join(root, "data")

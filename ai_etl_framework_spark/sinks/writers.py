@@ -22,10 +22,13 @@ What maps where:
 
 from __future__ import annotations
 
+import json
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ai_etl_framework_spark.storage import _write_bytes
 
 
 def ordered_columns(df: DataFrame, schema_cols: Sequence[str]) -> DataFrame:
@@ -135,9 +138,6 @@ def write_json_array(
     ``max_rows`` (the reference buffered the whole output in memory
     too). For anything large, use :func:`write_json` (JSONL, fully
     distributed)."""
-    import json
-    import os
-
     n = df.count()
     if n > max_rows:
         raise ValueError(
@@ -145,11 +145,9 @@ def write_json_array(
             "use write_json (JSONL) for large outputs"
         )
     rows = [r.asDict(recursive=True) for r in df.collect()]
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rows, f, indent=2 if pretty else None, default=str)
-    os.replace(tmp, path)  # temp-file + atomic rename (ref json_loader commit)
+    body = json.dumps(rows, indent=2 if pretty else None, default=str)
+    # one atomic replace per file (ref json_loader's temp-file commit)
+    _write_bytes(df.sparkSession, path, body.encode("utf-8"))
     if schema_export:
         sidecar = {
             "fields": [
@@ -157,8 +155,8 @@ def write_json_array(
                 for fld in df.schema.fields
             ]
         }
-        with open(path + ".schema.json", "w") as f:
-            json.dump(sidecar, f, indent=2)
+        body = json.dumps(sidecar, indent=2)
+        _write_bytes(df.sparkSession, path + ".schema.json", body.encode("utf-8"))
 
 
 def write_jdbc(

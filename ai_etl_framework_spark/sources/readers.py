@@ -31,6 +31,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ai_etl_framework_spark.storage import (
+    _list_dir,
+    _read_bytes,
+    _recover_interrupted_swap,
+    _write_bytes,
+)
+
 
 def with_row_id(df: DataFrame, name: str = "_row_id") -> DataFrame:
     """Stable 0-based input-order id: file name + in-file position.
@@ -365,14 +372,6 @@ def _read_columns(spark, md, db_schema, table) -> list:
     return sorted(fields, key=lambda f: f["position"])
 
 
-def _first_file(path: str) -> str:
-    if os.path.isdir(path):
-        for name in sorted(os.listdir(path)):
-            if not name.startswith(("_", ".")):
-                return os.path.join(path, name)
-    return path
-
-
 def _sniff_json_array(spark: SparkSession, path: str) -> bool:
     """True when the input's first non-blank line opens a JSON array.
     Uses the Spark text source (limit 1 → one-partition read of the
@@ -405,18 +404,17 @@ def incremental_manifest(
     with file names — content hashing 100 TB of input to detect
     change is not viable; mtime-based invalidation can be added).
 
-    Returns the DataFrame of NEW files only and appends their names to
-    the manifest on ``commit()`` (attached attribute)."""
-    seen: set[str] = set()
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            seen = {line.strip() for line in f if line.strip()}
-    all_files = [
-        os.path.join(data_path, n)
-        for n in sorted(os.listdir(data_path))
-        if not n.startswith(("_", "."))
-    ]
-    new = [f for f in all_files if f not in seen]
+    Returns the DataFrame of NEW files only; ``commit_manifest()``
+    (attached attribute) records their names. The manifest is one
+    ``os.path.join(data_path, name)`` entry per line; a commit writes
+    the whole manifest beside the old one and swaps it in, and a read
+    first rolls back a swap that died between its two renames."""
+    _recover_interrupted_swap(spark, manifest_path)
+    raw = _read_bytes(spark, manifest_path) or b""
+    seen = [line.strip() for line in raw.decode("utf-8").splitlines() if line.strip()]
+    known = set(seen)
+    listed = [os.path.join(data_path, e.name) for e in _list_dir(spark, data_path)]
+    new = [f for f in listed if f not in known]
     if not new:
         df = spark.createDataFrame([], schema="`__empty` string")
     else:
@@ -433,9 +431,7 @@ def incremental_manifest(
             df = getattr(reader, fmt)(new)
 
     def commit() -> None:
-        with open(manifest_path, "a") as f:
-            for p in new:
-                f.write(p + "\n")
+        _write_bytes(spark, manifest_path, "".join(p + "\n" for p in seen + new).encode("utf-8"))
 
     df.commit_manifest = commit  # type: ignore[attr-defined]
     return df

@@ -1,41 +1,54 @@
-"""Intermediate-artifact storage over the Hadoop FileSystem API.
+"""The library's filesystem layer, over the Hadoop FileSystem API.
 
-Reference: src/storage/{base,file_storage,s3_storage}.py — an abstract
-save/load/exists/delete/list/cleanup surface with a local-filesystem
-implementation and an S3 twin (boto3, :26-260).
+Every library call that lists, reads, writes or deletes a path goes
+through this module. ``_fs`` resolves a path to its Hadoop FileSystem
+by scheme, so one code path serves plain paths, ``file://``,
+``hdfs://`` and ``s3a://`` alike, with the cluster's credentials and
+retry policy instead of driver-side client loops:
 
-Spark-first mapping: ONE class. The Hadoop FileSystem API resolves the
-scheme per URI, so the same code serves ``file://``, ``hdfs://`` and
-``s3a://`` — on a cluster you point ``base_path`` at
-``s3a://bucket/prefix`` and get the reference's S3Storage behavior
-with the cluster's committers, credentials and retry policy instead of
-driver-side boto3 loops. Records stay DataFrames end to end (the
+- ``_exists`` and ``_list_dir`` — existence and a directory's visible
+  children (``_``/``.`` names skipped, as Spark's file index skips
+  them);
+- ``_read_bytes`` / ``_write_bytes`` — small files: manifests,
+  sidecars, uploads;
+- ``_swap`` / ``_recover_interrupted_swap`` — the two-rename replace
+  shared by the CDC snapshot, compaction, the keyed-store services and
+  ``_write_bytes`` off the local filesystem.
+
+Two local-only sites stay outside it, each for a reason:
+
+- ``sinks/versioned.py`` claims each version with a posix ``os.link``
+  (atomic create-if-absent); it refuses a URI root at construction.
+- ``session.py::_table_cache_key`` stats testdata tables with
+  ``os.stat``: a path it cannot read only means no plan cache, and a
+  Hadoop listing per ``load_table`` call would cost what the cache
+  exists to save.
+
+``IntermediateStorage`` is the reference's artifact store
+(src/storage/{base,file_storage,s3_storage}.py: a save/load/exists/
+delete/list/cleanup surface with a local and an S3 implementation) as
+ONE class over these helpers. Records stay DataFrames end to end (the
 reference materializes List[Record] through pandas/pyarrow — at 100 TB
-an intermediate must never funnel through the driver).
-
-Layout parity (file_storage.py:36-77): parquet dataset per key plus a
+an intermediate must never funnel through the driver). Layout parity
+(file_storage.py:36-77): parquet dataset per key plus a
 ``<key>.meta.json`` sidecar carrying ``record_count``, the serialized
 schema (engine-independent field dicts) and caller metadata; staged
 pipeline keys are ``{pipeline_id}/extracted`` / ``{pipeline_id}/
 transformed`` and ``cleanup(pipeline_id)`` removes the whole prefix.
-
 Presigned upload/download URLs (s3_storage.py:217-259) are
 boto3-specific; ``presigned_url`` is import-gated with an install
 hint. Presigning is pure local signature math, so it is tested with
 throwaway credentials — no bucket required.
-
-The module-level helpers (``_fs``, ``_exists``, ``_swap``,
-``_recover_interrupted_swap``) are the same layer for whole datasets:
-the existence check and the two-rename directory swap shared by the
-CDC snapshot, compaction, the keyed-store services and the
-dashboard's gold lookup.
 """
 
 from __future__ import annotations
 
 import json
-from typing import Any, Optional
+import os
+import tempfile
+from typing import Any, NamedTuple, Optional
 
+from py4j.java_gateway import is_instance_of
 from pyspark.sql import DataFrame, SparkSession
 
 from ai_etl_framework_spark.errors import StorageError
@@ -101,23 +114,81 @@ def _swap(spark: SparkSession, new_path: str, cur_path: str) -> None:
         fs.delete(old, True)
 
 
+class _Entry(NamedTuple):
+    name: str
+    size: int
+    mtime_ms: int
+    is_dir: bool
+
+
+def _list_dir(spark: SparkSession, path: str) -> list[_Entry]:
+    """The children of directory ``path``, sorted by name, skipping
+    ``_``/``.`` names as Spark's file index does; ``[]`` when ``path``
+    does not exist."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return []
+    entries = [
+        _Entry(st.getPath().getName(), st.getLen(), st.getModificationTime(),
+               st.isDirectory())
+        for st in fs.listStatus(hpath)
+    ]
+    return sorted(e for e in entries if not e.name.startswith(("_", ".")))
+
+
+def _read_bytes(spark: SparkSession, path: str) -> Optional[bytes]:
+    """A small file's bytes, or ``None`` when ``path`` does not exist."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        # readAllBytes is Java 9+; Java 17 is the floor here
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write ``data`` to ``path``, replacing it; missing parent
+    directories are created.
+
+    The bytes go to a local temp file and move in with one
+    ``moveFromLocalFile``: streaming them over py4j is an order of
+    magnitude slower. A ``ChecksumFileSystem`` (the local one) is
+    bypassed for its raw filesystem: its ``.crc`` sidecar would make
+    Spark's readers fail on the file once it is replaced out of band.
+    The payload lands beside the target as ``<path>.next``. The raw
+    local filesystem renames it over the target with one atomic
+    rename(2); other filesystems refuse a rename onto an existing file,
+    so there the two-rename :func:`_swap` replaces it."""
+    fs, dst, jvm = _fs(spark, path)
+    gateway = spark.sparkContext._gateway
+    if is_instance_of(gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        crc = fs.getChecksumFile(dst)
+        fs = fs.getRawFileSystem()
+        # a sidecar left by an earlier checksummed write would not match
+        fs.delete(crc, False)
+    nxt = path + ".next"
+    with tempfile.TemporaryDirectory() as tmp:
+        local = os.path.join(tmp, "payload")
+        with open(local, "wb") as fh:
+            fh.write(data)
+        fs.moveFromLocalFile(jvm.org.apache.hadoop.fs.Path(local),
+                             jvm.org.apache.hadoop.fs.Path(nxt))
+    if not is_instance_of(gateway, fs, "org.apache.hadoop.fs.RawLocalFileSystem"):
+        _swap(spark, nxt, path)
+    elif not fs.rename(jvm.org.apache.hadoop.fs.Path(nxt), dst):
+        raise IOError(f"rename({nxt}, {path}) failed")
+
+
 class IntermediateStorage:
     def __init__(self, spark: SparkSession, base_path: str = "./.state/intermediate"):
         self.spark = spark
         self.base_path = base_path.rstrip("/")
-        jvm = spark._jvm
-        self._jpath = jvm.org.apache.hadoop.fs.Path
-        self._conf = spark._jsc.hadoopConfiguration()
 
-    # -- hadoop fs plumbing -------------------------------------------
-
-    def _path(self, *parts: str):
-        return self._jpath("/".join((self.base_path,) + parts))
-
-    def _fs(self, path):
-        return path.getFileSystem(self._conf)
-
-    # -- reference surface --------------------------------------------
+    def _path(self, key: str) -> str:
+        return f"{self.base_path}/{key}".rstrip("/")
 
     def save(
         self,
@@ -131,8 +202,8 @@ class IntermediateStorage:
         count job; parquet row-group stats make it a footer read)."""
         data_path = self._path(key)
         try:
-            df.write.mode(mode).parquet(str(data_path))
-            n = self.spark.read.parquet(str(data_path)).count()
+            df.write.mode(mode).parquet(data_path)
+            n = self.spark.read.parquet(data_path).count()
             sidecar = {
                 "record_count": n,
                 "schema": [
@@ -142,13 +213,8 @@ class IntermediateStorage:
                 ],
                 "custom_metadata": metadata or {},
             }
-            meta_path = self._path(key + ".meta.json")
-            fs = self._fs(meta_path)
-            out = fs.create(meta_path, True)
-            try:
-                out.write(json.dumps(sidecar, indent=2, default=str).encode("utf-8"))
-            finally:
-                out.close()
+            _write_bytes(self.spark, data_path + ".meta.json",
+                         json.dumps(sidecar, indent=2, default=str).encode("utf-8"))
             return n
         except Exception as e:
             raise StorageError(f"Failed to save records to {key}: {e}") from e
@@ -156,57 +222,38 @@ class IntermediateStorage:
     def load(self, key: str) -> tuple[DataFrame, Optional[dict[str, Any]]]:
         """DataFrame + sidecar dict (None when no sidecar). The data
         never routes through the driver — callers keep planning on it."""
-        data_path = self._path(key)
         if not self.exists(key):
             raise StorageError(f"No stored records for key: {key}")
-        df = self.spark.read.parquet(str(data_path))
-        meta = None
-        meta_path = self._path(key + ".meta.json")
-        fs = self._fs(meta_path)
-        if fs.exists(meta_path):
-            stream = fs.open(meta_path)
-            try:
-                # readAllBytes is Java 9+; Java 17 is the floor here
-                meta = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-            finally:
-                stream.close()
-        return df, meta
+        raw = _read_bytes(self.spark, self._path(key) + ".meta.json")
+        meta = None if raw is None else json.loads(raw.decode("utf-8"))
+        return self.spark.read.parquet(self._path(key)), meta
 
     def exists(self, key: str) -> bool:
-        p = self._path(key)
-        return bool(self._fs(p).exists(p))
+        return _exists(self.spark, self._path(key))
 
     def delete(self, key: str) -> None:
         for suffix in ("", ".meta.json"):
-            p = self._path(key + suffix)
-            self._fs(p).delete(p, True)
+            fs, hpath, _ = _fs(self.spark, self._path(key) + suffix)
+            fs.delete(hpath, True)
 
     def list_keys(self, prefix: Optional[str] = None) -> list[str]:
         """Keys (relative paths) of stored parquet datasets under the
-        optional prefix, sidecars excluded."""
-        root = self._path(prefix) if prefix else self._jpath(self.base_path)
-        fs = self._fs(root)
-        if not fs.exists(root):
-            return []
-        # strip the QUALIFIED base: listStatus returns fully-qualified
-        # URIs (file:/abs/...), so a relative base_path (including the
-        # default ./.state/intermediate) would never match as a raw
-        # string and every key came back as the full URI (r4 review)
-        base = str(fs.makeQualified(self._jpath(self.base_path))) + "/"
+        optional prefix: directories holding a ``_SUCCESS`` marker.
+        Keys are built from the listed names, never from the listing's
+        fully-qualified URIs, so a relative ``base_path`` yields
+        relative keys."""
         out = []
-        stack = [root]
+        stack = [prefix.strip("/")] if prefix else [""]
         while stack:
-            for status in fs.listStatus(stack.pop()):
-                p = status.getPath()
-                name = p.getName()
-                if name.endswith(".meta.json"):
+            rel = stack.pop()
+            for e in _list_dir(self.spark, self._path(rel)):
+                if not e.is_dir:
                     continue
-                if status.isDirectory():
-                    # a parquet dataset dir contains _SUCCESS / part files
-                    if fs.exists(self._jpath(str(p) + "/_SUCCESS")):
-                        out.append(str(p).split(base, 1)[-1])
-                    else:
-                        stack.append(p)
+                key = f"{rel}/{e.name}".lstrip("/")
+                if _exists(self.spark, self._path(key) + "/_SUCCESS"):
+                    out.append(key)
+                else:
+                    stack.append(key)
         return sorted(out)
 
     def cleanup(self, pipeline_id: str) -> None:

@@ -66,24 +66,31 @@ def _twin_sql(entrymod, name: str) -> str | None:
     return entrymod.oracle_sql().get(name)
 
 
+def _duckdb_twin_con():
+    """A plain in-memory DuckDB connection with one ``read_parquet``
+    view per testdata table — the views the correctness gate
+    registers."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in (
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    return con
+
+
 def _duckdb_twins() -> dict[str, float]:
     """Run each headline query's oracle SQL in DuckDB over the same
     parquet; returns {query: seconds}. Kept independent of the Spark
     session — a plain in-memory connection with the table views the
     correctness gate registers."""
-    import duckdb
-
     import __spark_entry__ as entrymod
 
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = _duckdb_twin_con()
     out: dict[str, float] = {}
     for name in BENCH_QUERIES:
         sql = _twin_sql(entrymod, name)
@@ -327,19 +334,9 @@ def main() -> None:
         warm[name] = round(tail[len(tail) // 2], 4)
         warm_min[name] = round(min(raw_runs[name]), 4)
     if borderline:
-        import duckdb as _duckdb
-
         import __spark_entry__ as _entrymod
 
-        con = _duckdb.connect()
-        for t in (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        ):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
+        con = _duckdb_twin_con()
         for name in borderline:
             sql = _twin_sql(_entrymod, name)
             if not sql:

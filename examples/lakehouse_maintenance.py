@@ -6,7 +6,7 @@ reference's append-only incremental load:
 
 1. A CDC feed (insert/update/delete events with a sequence number)
    folds into a keyed parquet snapshot via checkpointed
-   foreachBatch + merge_upsert (streaming/cdc.py) — exactly-once.
+   foreachBatch + apply_cdc_batch (streaming/cdc.py) — exactly-once.
 2. Streaming upserts fragment the snapshot; compact_parquet
    (sinks/compaction.py) rewrites it into target-size files behind an
    atomic swap once needs_compaction trips.

@@ -25,13 +25,26 @@ STATUS_KEYS = {
 }
 
 
+def _root(tmp_path, form):
+    """``tmp_path`` as a plain path or as its ``file://`` URI."""
+    return ("file://" if form == "file_uri" else "") + str(tmp_path)
+
+
+def _local(path):
+    return path[len("file://"):] if path.startswith("file://") else path
+
+
 @pytest.fixture()
-def svc(spark, tmp_path):
+def svc(spark, tmp_path, request):
+    """The service over a plain base path, or over the same path as a
+    ``file://`` URI when a test parametrizes it indirectly."""
+    root = _root(tmp_path, getattr(request, "param", "plain"))
     return PipelineApiService(
-        spark,
-        base_dir=str(tmp_path / "data"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        spark, base_dir=f"{root}/data", checkpoint_dir=f"{root}/ckpt"
     )
+
+
+BOTH_FORMS = pytest.mark.parametrize("svc", ["plain", "file_uri"], indirect=True)
 
 
 def _config(sf_dir, **overrides):
@@ -71,6 +84,7 @@ def test_unified_run_shapes_and_outputs(svc, spark, sf_dir):
     assert status["load_records"] == n_src
 
 
+@BOTH_FORMS
 def test_staged_lifecycle(svc, spark, sf_dir):
     resp = svc.init_staged(_config(sf_dir, mode="staged"))
     assert resp["status"] == "initialized"
@@ -100,7 +114,7 @@ def test_staged_lifecycle(svc, spark, sf_dir):
     assert pid in [s["pipeline_id"] for s in listed]
     assert svc.list_pipelines(mode="unified") == []
 
-    ckpt = os.path.join(svc.checkpoint_dir, pid)
+    ckpt = _local(os.path.join(svc.checkpoint_dir, pid))
     assert os.path.exists(ckpt)
     svc.delete_pipeline(pid)
     assert not os.path.exists(ckpt)
@@ -126,7 +140,8 @@ def test_quarantine_path_injected_for_anomaly_splitter(svc, sf_dir):
     assert "/acme-corp/quarantine/orders-feed_anomalies.csv" in outs["quarantine_path"]
 
 
-def test_bronze_upload_and_list(svc):
+@BOTH_FORMS
+def test_bronze_upload_and_list(svc, tmp_path):
     """Bronze file management (r12, ref main.py:1550/1609): upload
     lands under {base}/{org-slug}/bronze, traversal is stripped, the
     listing carries name/path/size/modified."""
@@ -134,6 +149,8 @@ def test_bronze_upload_and_list(svc):
     assert out["success"] and out["file"]["name"] == "sales.csv"
     assert out["file"]["size"] == 8
     assert "/acme-corp/bronze/sales.csv" in out["file"]["path"]
+    landed = tmp_path / "data" / "acme-corp" / "bronze" / "sales.csv"
+    assert landed.read_bytes() == b"a,b\n1,2\n"
 
     # path traversal cannot escape the bronze dir
     evil = svc.upload_bronze("Acme Corp", "../../etc/passwd", b"x")
@@ -158,3 +175,15 @@ def test_bronze_upload_rejects_dot_names(svc):
     for bad in (".", "..", "a/..", "./"):
         with _pytest.raises(ValueError, match="invalid filename|plain file"):
             svc.upload_bronze("Acme Corp", bad, b"x")
+
+
+@BOTH_FORMS
+def test_bronze_upload_replaced_out_of_band_still_reads(svc, spark, tmp_path):
+    """An upload leaves no ``.crc`` checksum sidecar: a user copying a
+    new file over it must not make Spark's CSV reader fail on a
+    checksum that no longer matches."""
+    path = svc.upload_bronze("Acme Corp", "sales.csv", b"a,b\n1,2\n")["file"]["path"]
+    bronze = tmp_path / "data" / "acme-corp" / "bronze"
+    (bronze / "sales.csv").write_bytes(b"a,b\n1,2\n3,4\n5,6\n")
+    assert spark.read.option("header", True).csv(path).count() == 3
+    assert sorted(p.name for p in bronze.iterdir()) == ["sales.csv"]

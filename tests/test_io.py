@@ -199,9 +199,18 @@ def test_fan_out_two_sinks(spark, small, tmp_path):
 # -- incremental manifest ---------------------------------------------
 
 
-def test_incremental_manifest(spark, small, tmp_path):
+def _as(form, path):
+    """``path`` as a plain path or as its ``file://`` URI."""
+    return ("file://" if form == "file_uri" else "") + str(path)
+
+
+BOTH_FORMS = pytest.mark.parametrize("form", ["plain", "file_uri"])
+
+
+@BOTH_FORMS
+def test_incremental_manifest(spark, small, tmp_path, form):
     data = tmp_path / "in"
-    manifest = str(tmp_path / "manifest.txt")
+    manifest = _as(form, tmp_path / "manifest.txt")
     small.coalesce(1).write.parquet(str(data / "batch1"))
     # flatten: manifest works on a dir of files
     flat = tmp_path / "flat"
@@ -209,20 +218,42 @@ def test_incremental_manifest(spark, small, tmp_path):
     for i, f in enumerate(glob.glob(str(data / "batch1" / "*.parquet"))):
         os.rename(f, str(flat / f"file{i}.parquet"))
 
-    df1 = incremental_manifest(spark, str(flat), manifest)
+    df1 = incremental_manifest(spark, _as(form, flat), manifest)
     assert df1.count() == 3
     df1.commit_manifest()
+    assert (tmp_path / "manifest.txt").read_text().splitlines() == [
+        os.path.join(_as(form, flat), "file0.parquet")
+    ]
 
     # no new files → empty frame
-    df2 = incremental_manifest(spark, str(flat), manifest)
+    df2 = incremental_manifest(spark, _as(form, flat), manifest)
     assert df2.count() == 0
 
     # one new file arrives → only it is read
     small.limit(1).coalesce(1).write.parquet(str(data / "batch2"))
     newf = glob.glob(str(data / "batch2" / "*.parquet"))[0]
     os.rename(newf, str(flat / "file_new.parquet"))
-    df3 = incremental_manifest(spark, str(flat), manifest)
+    df3 = incremental_manifest(spark, _as(form, flat), manifest)
     assert df3.count() == 1
+    df3.commit_manifest()
+    assert len((tmp_path / "manifest.txt").read_text().splitlines()) == 2
+    assert sorted(os.listdir(tmp_path)) == ["flat", "in", "manifest.txt"]
+
+
+@BOTH_FORMS
+def test_incremental_manifest_recovers_interrupted_swap(spark, small, tmp_path, form):
+    """A commit that died between its swap's two renames leaves only
+    ``<manifest>.old``: the next read restores it, so no file is read
+    twice."""
+    small.coalesce(1).write.parquet(str(tmp_path / "in"))
+    data = _as(form, tmp_path / "in")
+    manifest = _as(form, tmp_path / "manifest.txt")
+    incremental_manifest(spark, data, manifest).commit_manifest()
+    os.rename(tmp_path / "manifest.txt", tmp_path / "manifest.txt.old")
+
+    assert incremental_manifest(spark, data, manifest).count() == 0
+    assert (tmp_path / "manifest.txt").exists()
+    assert not (tmp_path / "manifest.txt.old").exists()
 
 
 # -- medallion paths --------------------------------------------------
@@ -242,19 +273,34 @@ def test_generate_outputs():
     assert out["bronze_dir"] == "/data/acme-corp/bronze"
 
 
-def test_write_json_array(spark, tmp_path):
+@BOTH_FORMS
+def test_write_json_array(spark, tmp_path, form):
     from ai_etl_framework_spark.sinks.writers import write_json_array
 
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    out = str(tmp_path / "out.json")
+    out = _as(form, tmp_path / "nested" / "out.json")
     write_json_array(df.orderBy("id"), out, pretty=True, schema_export=True)
-    data = json.load(open(out))
+    local = str(tmp_path / "nested" / "out.json")
+    data = json.load(open(local))
     assert data == [{"id": 1, "v": "a"}, {"id": 2, "v": "b"}]
-    sidecar = json.load(open(out + ".schema.json"))
+    sidecar = json.load(open(local + ".schema.json"))
     assert sidecar["fields"][0] == {"name": "id", "type": "bigint", "nullable": True}
 
     with pytest.raises(ValueError, match="max_rows"):
         write_json_array(df, out, max_rows=1)
+
+
+@BOTH_FORMS
+def test_write_json_array_replaces_without_leftovers(spark, tmp_path, form):
+    """Rewriting an existing array file replaces it and its sidecar in
+    place: no ``.next``, ``.old`` or ``.crc`` file is left beside."""
+    from ai_etl_framework_spark.sinks.writers import write_json_array
+
+    out = _as(form, tmp_path / "out.json")
+    write_json_array(spark.range(3), out, schema_export=True)
+    write_json_array(spark.range(5), out, schema_export=True)
+    assert len(json.load(open(tmp_path / "out.json"))) == 5
+    assert sorted(os.listdir(tmp_path)) == ["out.json", "out.json.schema.json"]
 
 
 def test_incremental_manifest_multiple_new_csv_files(spark, tmp_path):

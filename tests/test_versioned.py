@@ -115,3 +115,14 @@ def test_concurrent_commit_loser_raises(spark, tmp_path):
     assert res["removed_files"] > 0
     assert _ids(t.read(1)) == [1, 2] and _ids(t.read(2)) == [99]
     assert set(os.listdir(t.data_dir)) < before
+
+
+@pytest.mark.parametrize("scheme", ["file://", "hdfs://nn:8020", "s3a://bucket"])
+def test_uri_root_is_refused_at_construction(spark, tmp_path, scheme):
+    """The commit protocol is a posix ``os.link`` claim, so a URI root
+    fails loudly instead of creating ``./file:/...`` under the working
+    directory."""
+    root = scheme + str(tmp_path / "t")
+    with pytest.raises(ValueError, match="os.link"):
+        VersionedTable(spark, root)
+    assert not (tmp_path / "t").exists()
